@@ -3,6 +3,7 @@ package graft.core
 import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.JsonNodeType
@@ -156,10 +157,11 @@ object Registry {
   def load(dir: Path): Either[String, Registry] = {
     if (!Files.isDirectory(dir)) return Left("No valid models defined")
     val parsed: Vector[ModelDefinition] =
-      Files.list(dir).iterator().asScala.toVector.sortBy(_.toString).flatMap { p =>
-        val text = try Some(Files.readString(p)) catch { case _: Exception => None }
-        text.flatMap(t => parseDefinition(t).toOption)
-      }
+      Using.resource(Files.list(dir))(_.iterator().asScala.toVector)
+        .sortBy(_.toString).flatMap { p =>
+          val text = try Some(Files.readString(p)) catch { case _: Exception => None }
+          text.flatMap(t => parseDefinition(t).toOption)
+        }
     val counts = parsed.groupBy(_.modelName.pluralCamel).view.mapValues(_.size)
     val unique = parsed.filter(m => counts(m.modelName.pluralCamel) == 1)
     if (unique.isEmpty) Left("No valid models defined")

@@ -1,6 +1,6 @@
 package graft.crud
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.core._
@@ -9,11 +9,12 @@ import graft.storage.StorageBackend
 
 /** gus CRUD semantics as Spark DataFrame programs (SURVEY §2.1 O1-O7).
   *
-  * Point lookups are pk-equality filters that Catalyst pushes into the
-  * parquet scan; existence checks and merges run against the backend's
-  * pk *slice* (one hash bucket for `ParquetBackend`), so no operation
-  * here is O(whole table) — unlike the reference, where every op
-  * deserializes and rewrites the entire store (`json/mod.rs:45-80`).
+  * Point reads and the existence checks of writes go through the
+  * backend's `lookup` (for `ParquetBackend` a driver-side read of one
+  * hash bucket that launches no Spark job); merges rewrite the
+  * backend's pk *slice* (that one bucket), so no operation here is
+  * O(whole table) — unlike the reference, where every op deserializes
+  * and rewrites the entire store (`json/mod.rs:45-80`).
   *
   * Writes are serialized per model (single-writer discipline): the
   * reference has unsynchronized read-modify-write races across its HTTP
@@ -33,9 +34,6 @@ final class CrudEngine(spark: SparkSession, backend: StorageBackend,
   private def pkCol(m: ModelDefinition) = col(m.primaryKey)
   private def pkLit(v: PrimValue) = lit(v.raw)
 
-  private def findInSlice(m: ModelDefinition, v: PrimValue): Option[Row] =
-    backend.slice(m, v).filter(pkCol(m) === pkLit(v)).head(1).headOption
-
   /** O1 create_one (`model.rs:49-56`): validate, null-pad, insert iff
     * pk absent else AlreadyExists. */
   def createOne(m: ModelDefinition, json: String): Either[String, Record] =
@@ -46,7 +44,7 @@ final class CrudEngine(spark: SparkSession, backend: StorageBackend,
         case _ => return Left("invalid primary key value")
       }
       lockFor(m).synchronized {
-        if (findInSlice(m, pk).isDefined)
+        if (backend.lookup(m, pk).isDefined)
           // `json/mod.rs:89`
           Left("A record for the given key already exists, try to update it instead (PUT)")
         else {
@@ -63,7 +61,7 @@ final class CrudEngine(spark: SparkSession, backend: StorageBackend,
   /** O2 read_one (`model.rs:58-66`): point lookup by typed pk. */
   def readOne(m: ModelDefinition, id: String): Either[String, Record] =
     Records.parseUriId(id, m).flatMap { pk =>
-      findInSlice(m, pk).map(Records.fromRow(_, m))
+      backend.lookup(m, pk).map(Records.fromRow(_, m))
         // `json/mod.rs:103`; id rendered as its JSON form (typed key)
         .toRight(s"No record found with id: ${pk.jsonKey}")
     }
@@ -82,7 +80,7 @@ final class CrudEngine(spark: SparkSession, backend: StorageBackend,
       rec <- Records.parseRecord(json, m,
         requiredOverride = Some(m.required.filter(provided.contains)))
       merged <- lockFor(m).synchronized {
-        findInSlice(m, pk) match {
+        backend.lookup(m, pk) match {
           case None => // `json/mod.rs:117`
             Left("No record found for the given key, try to create it instead (POST)")
           case Some(old) =>
@@ -106,7 +104,7 @@ final class CrudEngine(spark: SparkSession, backend: StorageBackend,
   def deleteOne(m: ModelDefinition, id: String): Either[String, Record] =
     Records.parseUriId(id, m).flatMap { pk =>
       lockFor(m).synchronized {
-        findInSlice(m, pk) match {
+        backend.lookup(m, pk) match {
           case None => // `json/mod.rs:132`
             Left(s"No record found to remove with id: ${pk.jsonKey}")
           case Some(row) =>

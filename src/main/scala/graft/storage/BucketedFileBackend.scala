@@ -3,6 +3,9 @@ package graft.storage
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.core.{ModelDefinition, PrimValue}
@@ -20,15 +23,15 @@ abstract class BucketedFileBackend(spark: SparkSession, root: String,
 
   private def modelDir(m: ModelDefinition): Path =
     Paths.get(root, m.modelName.pluralCamel)
-  private def bucketDir(m: ModelDefinition, b: Int): Path =
-    modelDir(m).resolve(s"_bucket=$b")
+  private def bucketDir(m: ModelDefinition, v: PrimValue): Path =
+    modelDir(m).resolve(s"_bucket=${StorageBackend.bucketOf(v.raw, buckets)}")
 
   override def table(model: ModelDefinition): DataFrame = {
     val dir = modelDir(model)
     if (!Files.isDirectory(dir)) StorageBackend.empty(spark, model)
     else {
-      val hasData = Files.list(dir).iterator().asScala.exists(p =>
-        p.getFileName.toString.startsWith("_bucket="))
+      val hasData = Using.resource(Files.list(dir))(_.iterator().asScala
+        .exists(_.getFileName.toString.startsWith("_bucket=")))
       if (!hasData) StorageBackend.empty(spark, model)
       // schema pinned: partition-col inference off, read data columns only
       else spark.read.schema(model.schema).format(fmt)
@@ -36,31 +39,29 @@ abstract class BucketedFileBackend(spark: SparkSession, root: String,
     }
   }
 
-  private implicit class IterOps[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = {
-      new Iterator[A] {
-        def hasNext: Boolean = it.hasNext
-        def next(): A = it.next()
-      }
-    }
+  /** The data files of the bucket `v` maps to; empty if the bucket
+    * does not exist. Hidden (`.`) and marker (`_`) files are skipped,
+    * as Spark's file index skips them. */
+  protected def bucketFiles(m: ModelDefinition, v: PrimValue): Seq[Path] = {
+    val dir = bucketDir(m, v)
+    if (!Files.isDirectory(dir)) Nil
+    else Using.resource(Files.list(dir))(_.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(suffix) && !n.startsWith(".") && !n.startsWith("_")
+    }.toVector)
   }
 
-  override def slice(model: ModelDefinition, v: PrimValue): DataFrame = {
-    val b = StorageBackend.bucketOf(v.raw, buckets)
-    val dir = bucketDir(model, b)
-    if (!Files.isDirectory(dir) ||
-        !Files.list(dir).iterator().asScala.exists(_.toString.endsWith(suffix)))
-      StorageBackend.empty(spark, model)
-    else spark.read.schema(model.schema).format(fmt).load(dir.toString)
-  }
+  override def slice(model: ModelDefinition, v: PrimValue): DataFrame =
+    if (bucketFiles(model, v).isEmpty) StorageBackend.empty(spark, model)
+    else spark.read.schema(model.schema).format(fmt)
+      .load(bucketDir(model, v).toString)
 
   override def writeSlice(model: ModelDefinition, v: PrimValue,
       df: DataFrame): Unit = {
-    val b = StorageBackend.bucketOf(v.raw, buckets)
     val tmp = modelDir(model).resolve(s".tmp-${java.util.UUID.randomUUID()}")
     Files.createDirectories(modelDir(model))
     df.write.mode(SaveMode.Overwrite).format(fmt).save(tmp.toString)
-    val target = bucketDir(model, b)
+    val target = bucketDir(model, v)
     deleteRecursively(target)
     Files.move(tmp, target)
   }
@@ -82,8 +83,8 @@ abstract class BucketedFileBackend(spark: SparkSession, root: String,
 
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
+      Using.resource(Files.walk(p))(_.sorted(Comparator.reverseOrder[Path]())
+        .iterator().asScala.foreach(Files.delete))
 }
 
 /** Human-readable line-per-record store (the modern spelling of gus's

@@ -1,19 +1,119 @@
 package graft.storage
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.Path
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.io.LocalInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+
+import graft.core.{AttrType, ModelDefinition, PrimValue, PrimitiveType}
 
 /** Canonical store: one directory per model, hash-bucketed by primary
   * key into `_bucket=N` subdirectories.
   *
   * Replaces gus's single-file JSON store (whole-file read + whole-file
   * rewrite per request, `json/mod.rs:45-80`) with a layout where a
-  * point read touches exactly one bucket directory (no partition
-  * discovery over the rest) and a point write rewrites one bucket
-  * atomically (write-temp-then-swap). With B buckets, point ops are
-  * O(|table|/B); at cluster scale B is sized so a bucket fits in one
-  * executor's working set. Layout and atomicity live in
-  * [[BucketedFileBackend]]; this binds the parquet format.
+  * point op touches exactly one bucket directory and a point write
+  * rewrites one bucket atomically (write-temp-then-swap). With B
+  * buckets, point ops are O(|table|/B); at cluster scale B is sized so
+  * a bucket fits in one executor's working set. Layout and atomicity
+  * live in [[BucketedFileBackend]]; this binds the parquet format.
+  *
+  * Point reads (`lookup`) bypass Spark: the bucket's files are read on
+  * the calling thread through parquet-hadoop, with a pk-equality
+  * filter that skips row groups whose statistics exclude the key, and
+  * the read stops at the first hit. Scans and writes stay DataFrames.
   */
 final class ParquetBackend(spark: SparkSession, root: String,
     buckets: Int = 64)
-  extends BucketedFileBackend(spark, root, buckets, "parquet", ".parquet")
+  extends BucketedFileBackend(spark, root, buckets, "parquet", ".parquet") {
+
+  override def lookup(model: ModelDefinition, v: PrimValue): Option[Row] = {
+    val filter = FilterCompat.get(ParquetBackend.pkEquals(model.primaryKey, v))
+    bucketFiles(model, v).iterator.flatMap { f =>
+      Using.resource(new ParquetBackend.ModelReader(f, model)
+        .withFilter(filter).build())(r => Option(r.read()))
+    }.nextOption().map(ParquetBackend.toRow(_, model))
+  }
+}
+
+object ParquetBackend {
+  private def pkEquals(pk: String, v: PrimValue): FilterPredicate = v match {
+    case PrimValue.IntVal(x) =>
+      FilterApi.eq(FilterApi.longColumn(pk), java.lang.Long.valueOf(x))
+    case PrimValue.StrVal(x) =>
+      FilterApi.eq(FilterApi.binaryColumn(pk), Binary.fromString(x))
+    case PrimValue.BoolVal(x) =>
+      FilterApi.eq(FilterApi.booleanColumn(pk), java.lang.Boolean.valueOf(x))
+    case PrimValue.FloatVal(x) =>
+      FilterApi.eq(FilterApi.doubleColumn(pk), java.lang.Double.valueOf(x))
+  }
+
+  /** Reads one local file as `Group`s, projected to the model's
+    * columns that the file has. No Hadoop `FileSystem` is involved. */
+  private final class ModelReader(f: Path, m: ModelDefinition)
+      extends ParquetReader.Builder[Group](new LocalInputFile(f),
+        new PlainParquetConfiguration()) {
+    override protected def getReadSupport(): ReadSupport[Group] =
+      new GroupReadSupport {
+        override def init(ctx: InitContext): ReadSupport.ReadContext = {
+          val file = ctx.getFileSchema
+          new ReadSupport.ReadContext(new MessageType(file.getName,
+            file.getFields.asScala.filter(t => m.attrType(t.getName).isDefined)
+              .asJava))
+        }
+      }
+  }
+
+  /** A record in model-schema order; attributes the file lacks are
+    * null, as in `spark.read.schema(model.schema)`. */
+  private def toRow(g: Group, m: ModelDefinition): Row = {
+    val t = g.getType
+    new GenericRowWithSchema(m.attributes.map { case (name, ty) =>
+      if (!t.containsField(name)) null
+      else {
+        val i = t.getFieldIndex(name)
+        if (g.getFieldRepetitionCount(i) == 0) null
+        else ty match {
+          case AttrType.Primitive(p) => value(g, i, p)
+          case AttrType.ArrayOf(p) => elements(g.getGroup(i, 0), p)
+        }
+      }
+    }.toArray, m.schema)
+  }
+
+  /** A LIST group's elements, in the three-level layout Spark writes
+    * (`repeated group list { element }`). */
+  private def elements(list: Group, p: PrimitiveType): Vector[Any] =
+    Vector.tabulate(list.getFieldRepetitionCount(0))(j =>
+      value(list.getGroup(0, j), 0, p))
+
+  /** Field `i` of `g`, widened like Spark's reader (INT32 → Long,
+    * FLOAT → Double). */
+  private def value(g: Group, i: Int, p: PrimitiveType): Any = {
+    val physical = g.getType.getType(i).asPrimitiveType.getPrimitiveTypeName
+    p match {
+      case PrimitiveType.PInteger =>
+        if (physical == PrimitiveTypeName.INT32) g.getInteger(i, 0).toLong
+        else g.getLong(i, 0)
+      case PrimitiveType.PString => g.getString(i, 0)
+      case PrimitiveType.PBoolean => g.getBoolean(i, 0)
+      case PrimitiveType.PFloat =>
+        if (physical == PrimitiveTypeName.FLOAT) g.getFloat(i, 0).toDouble
+        else g.getDouble(i, 0)
+    }
+  }
+}

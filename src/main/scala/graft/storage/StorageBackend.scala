@@ -1,6 +1,7 @@
 package graft.storage
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.core.{ModelDefinition, PrimValue}
 
@@ -9,9 +10,11 @@ import graft.core.{ModelDefinition, PrimValue}
   * DataFrame slices so implementations can bound the I/O of point
   * operations.
   *
-  * A *slice* for pk value `v` is any DataFrame guaranteed to contain
-  * the record with pk `v` iff it exists. A whole-table backend returns
-  * the full table; a bucketed backend returns one hash bucket —
+  * A *slice* for pk value `v` is the unit a point write replaces:
+  * exactly the records stored in the partition `v` maps to, no more
+  * and no fewer, since `writeSlice` replaces that whole partition with
+  * a frame derived from the slice. A whole-table backend's slice is
+  * the full table; a bucketed backend's is one hash bucket —
   * `O(table/buckets)` I/O per point op instead of `O(table)`, which is
   * the difference between usable and unusable at 100 TB.
   */
@@ -21,7 +24,7 @@ trait StorageBackend {
     * `json/mod.rs:45-72`). */
   def table(model: ModelDefinition): DataFrame
 
-  /** Minimal DataFrame guaranteed to contain pk=`v` if present. */
+  /** Exactly the records of the partition `v` maps to (see above). */
   def slice(model: ModelDefinition, v: PrimValue): DataFrame
 
   /** Replace the slice that `v` maps to with `df` (atomically). */
@@ -29,6 +32,13 @@ trait StorageBackend {
 
   /** Replace the whole table (used by bulk loads). */
   def overwrite(model: ModelDefinition, df: DataFrame): Unit
+
+  /** The record with pk `v` as a Row in model-schema order, or `None`.
+    * Backends that can read a record without launching a Spark job
+    * should; this default filters the slice and launches one or more. */
+  def lookup(model: ModelDefinition, v: PrimValue): Option[Row] =
+    slice(model, v).filter(col(model.primaryKey) === lit(v.raw))
+      .head(1).headOption
 }
 
 object StorageBackend {

@@ -209,8 +209,8 @@ final class ChangeLog(spark: SparkSession, dir: String,
   private def deleteTree(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
+      scala.util.Using.resource(Files.walk(p))(_.iterator().asScala.toSeq)
+        .reverse.foreach(Files.deleteIfExists(_))
     }
 
   /** Streaming view of one model's changes. */
