@@ -11,7 +11,8 @@ import graft.storage.StorageBackend
   *
   * Point reads and the existence checks of writes go through the
   * backend's `lookup` (for `ParquetBackend` a driver-side read of one
-  * hash bucket that launches no Spark job); merges rewrite the
+  * hash bucket that launches no Spark job), served whole-table reads
+  * through its `rows` (likewise no job there); merges rewrite the
   * backend's pk *slice* (that one bucket), so no operation here is
   * O(whole table) — unlike the reference, where every op deserializes
   * and rewrites the entire store (`json/mod.rs:45-80`).
@@ -119,9 +120,16 @@ final class CrudEngine(spark: SparkSession, backend: StorageBackend,
     }
 
   /** readMany — declared-but-todo in the reference
-    * (`graphql.rs:335-343,382`), implemented here: full scan as a
-    * DataFrame (callers page with limit). */
+    * (`graphql.rs:335-343,382`), implemented here: the full table as a
+    * DataFrame, the handle for Spark consumers (callers page with
+    * limit). */
   def readMany(m: ModelDefinition): DataFrame = backend.table(m)
+
+  /** readMany as served: every record of the model, through the
+    * backend's `rows` (for `ParquetBackend` a driver-side read of
+    * every bucket that launches no Spark job). */
+  def readAll(m: ModelDefinition): Vector[Record] =
+    backend.rows(m).map(Records.fromRow(_, m))
 
   /** Bulk load (engine extension): validated DataFrame → table.
     * Constraints are enforced the Spark way — one declarative

@@ -22,9 +22,10 @@ import graft.graphql.Ast._
   *    but ignores them, `graphql.rs:164` — a documented fidelity
   *    upgrade, since dropping them silently corrupts queries).
   *
-  * Extensions: `readMany` (plural-camel root field, full scan,
-  *  `todo!()` in the reference) and root-level fragment spreads
-  * (also `todo!()` there) are implemented.
+  * Extensions: `readMany` (plural-camel root field, every record
+  * through `CrudEngine.readAll`, which for the Parquet store launches
+  * no Spark job; `todo!()` in the reference) and root-level fragment
+  * spreads (also `todo!()` there) are implemented.
   */
 final class Executor(registry: Registry, engine: CrudEngine) {
 
@@ -180,8 +181,7 @@ final class Executor(registry: Registry, engine: CrudEngine) {
           registry.lookup(field.name) match {
             case Left(err) => ErrOut(err)
             case Right(m) =>
-              val rows = engine.readMany(m).collect().toVector
-              ManyOut(rows.map(Records.fromRow(_, m)), SchemaGen.typeName(m))
+              ManyOut(engine.readAll(m), SchemaGen.typeName(m))
           }
       case Mutation =>
         if (field.name.startsWith("addOne"))

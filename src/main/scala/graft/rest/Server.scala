@@ -22,13 +22,26 @@ import graft.graphql.{Ast, Executor}
   * Single JDK httpserver (offline env has no akka/http4s); request
   * handling delegates to the Spark CRUD engine, which serializes
   * writes per model.
+  *
+  * Accepted sockets get `TCP_NODELAY`. The JDK server writes a reply's
+  * headers and body as two segments, and under Nagle's algorithm the
+  * body waits for the client's delayed ACK of the headers (~40 ms on
+  * Linux, most of a served point read). The only switch is the
+  * JVM-wide `sun.net.httpserver.nodelay` property, read once when the
+  * JDK server's configuration class initializes. The companion's
+  * initializer sets it, and every server socket is created by
+  * [[Server.bind]], a companion method, so it is set before the first.
+  *
+  * A request that throws still gets gus's 400 `{"error": msg}`, and
+  * the server writes one stderr line naming the method, the path and
+  * the exception class, so storage failures show in the log.
   */
 final class Server(registry: Registry, engine: CrudEngine, port: Int,
     changeLog: Option[graft.streaming.ChangeLog] = None,
     viewHtml: Option[String] = None) {
 
   private val executor = new Executor(registry, engine)
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = Server.bind(port)
 
   def start(): Unit = {
     server.createContext("/", handle _)
@@ -63,9 +76,20 @@ final class Server(registry: Registry, engine: CrudEngine, port: Int,
   private def readBody(ex: HttpExchange): String =
     new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
 
-  private def handle(ex: HttpExchange): Unit = try {
-    val segs = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty).toList
+  private def handle(ex: HttpExchange): Unit = {
     val method = ex.getRequestMethod
+    val path = ex.getRequestURI.getPath
+    try route(ex, method, path.split("/").filter(_.nonEmpty).toList)
+    catch {
+      case e: Exception =>
+        System.err.println(
+          s"[server] $method $path failed: ${e.getClass.getName}")
+        respond(ex, 400, errorEnvelope(e.getMessage))
+    } finally ex.close()
+  }
+
+  private def route(ex: HttpExchange, method: String,
+      segs: List[String]): Unit =
     (method, segs) match {
       case ("POST", List("api", "graphql")) => handleGraphql(ex)
       case ("GET", List("api", "graphql")) =>
@@ -111,9 +135,6 @@ final class Server(registry: Registry, engine: CrudEngine, port: Int,
       // wrong shapes: exactly-2-segment rule etc (`server.rs:117-123`)
       case _ => respond(ex, 400, errorEnvelope("invalid endpoint"))
     }
-  } catch {
-    case e: Exception => respond(ex, 400, errorEnvelope(e.getMessage))
-  } finally ex.close()
 
   private def withModel(ex: HttpExchange, name: String)(
       f: ModelDefinition => Unit): Unit = {
@@ -266,6 +287,13 @@ final class Server(registry: Registry, engine: CrudEngine, port: Int,
 }
 
 object Server {
+  // must precede the first HttpServer.create in the JVM (see the class doc)
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** An unstarted JDK server on `port`; its sockets get `TCP_NODELAY`. */
+  def bind(port: Int): HttpServer =
+    HttpServer.create(new InetSocketAddress(port), 0)
+
   /** Handler-pool ceiling: each SSE subscriber pins one thread, so the
     * pool must be bounded (beyond it, connections are rejected — the
     * failure is visible instead of an unbounded thread pile-up). */

@@ -27,29 +27,43 @@ abstract class BucketedFileBackend(spark: SparkSession, root: String,
     modelDir(m).resolve(s"_bucket=${StorageBackend.bucketOf(v.raw, buckets)}")
 
   override def table(model: ModelDefinition): DataFrame = {
-    val dir = modelDir(model)
-    if (!Files.isDirectory(dir)) StorageBackend.empty(spark, model)
-    else {
-      val hasData = Using.resource(Files.list(dir))(_.iterator().asScala
-        .exists(_.getFileName.toString.startsWith("_bucket=")))
-      if (!hasData) StorageBackend.empty(spark, model)
-      // schema pinned: partition-col inference off, read data columns only
-      else spark.read.schema(model.schema).format(fmt)
-        .load(dir.toString + "/_bucket=*")
-    }
+    val dirs = bucketDirs(model)
+    if (dirs.isEmpty) StorageBackend.empty(spark, model)
+    // schema pinned: partition-col inference off, read data columns only.
+    // The bucket directories are passed as paths rather than as a
+    // `_bucket=*` glob, whose metadata probe logs a stack trace per load.
+    else spark.read.schema(model.schema).format(fmt)
+      .load(dirs.map(_.toString): _*)
   }
 
-  /** The data files of the bucket `v` maps to; empty if the bucket
-    * does not exist. Hidden (`.`) and marker (`_`) files are skipped,
-    * as Spark's file index skips them. */
-  protected def bucketFiles(m: ModelDefinition, v: PrimValue): Seq[Path] = {
-    val dir = bucketDir(m, v)
+  /** The model's `_bucket=N` directories in bucket order; empty if the
+    * model has no directory. Temp directories (`.tmp-*`) are skipped. */
+  private def bucketDirs(m: ModelDefinition): Seq[Path] = {
+    val dir = modelDir(m)
     if (!Files.isDirectory(dir)) Nil
     else Using.resource(Files.list(dir))(_.iterator().asScala.filter { p =>
+      p.getFileName.toString.startsWith("_bucket=") && Files.isDirectory(p)
+    }.toVector).sortBy(_.getFileName.toString.stripPrefix("_bucket=").toInt)
+  }
+
+  /** The data files of one bucket directory in name order; empty if it
+    * does not exist. Hidden (`.`) and marker (`_`) files are skipped,
+    * as Spark's file index skips them. */
+  private def dataFiles(bucket: Path): Seq[Path] =
+    if (!Files.isDirectory(bucket)) Nil
+    else Using.resource(Files.list(bucket))(_.iterator().asScala.filter { p =>
       val n = p.getFileName.toString
       n.endsWith(suffix) && !n.startsWith(".") && !n.startsWith("_")
-    }.toVector)
-  }
+    }.toVector).sortBy(_.getFileName.toString)
+
+  /** The data files of the bucket `v` maps to (see [[dataFiles]]). */
+  protected def bucketFiles(m: ModelDefinition, v: PrimValue): Seq[Path] =
+    dataFiles(bucketDir(m, v))
+
+  /** Every data file of the model: buckets in numeric order, each
+    * bucket's files in name order. */
+  protected def tableFiles(m: ModelDefinition): Seq[Path] =
+    bucketDirs(m).flatMap(dataFiles)
 
   override def slice(model: ModelDefinition, v: PrimValue): DataFrame =
     if (bucketFiles(model, v).isEmpty) StorageBackend.empty(spark, model)

@@ -32,10 +32,13 @@ import graft.core.{AttrType, ModelDefinition, PrimValue, PrimitiveType}
   * a bucket fits in one executor's working set. Layout and atomicity
   * live in [[BucketedFileBackend]]; this binds the parquet format.
   *
-  * Point reads (`lookup`) bypass Spark: the bucket's files are read on
-  * the calling thread through parquet-hadoop, with a pk-equality
-  * filter that skips row groups whose statistics exclude the key, and
-  * the read stops at the first hit. Scans and writes stay DataFrames.
+  * Serving reads bypass Spark: files are read on the calling thread
+  * through parquet-hadoop, with no Hadoop `FileSystem` and no job.
+  * A point read (`lookup`) opens the one bucket's files with a
+  * pk-equality filter that skips row groups whose statistics exclude
+  * the key, and stops at the first hit; a whole-table read (`rows`,
+  * GraphQL readMany) decodes every bucket's files. `table` and writes
+  * stay DataFrames.
   */
 final class ParquetBackend(spark: SparkSession, root: String,
     buckets: Int = 64)
@@ -48,6 +51,13 @@ final class ParquetBackend(spark: SparkSession, root: String,
         .withFilter(filter).build())(r => Option(r.read()))
     }.nextOption().map(ParquetBackend.toRow(_, model))
   }
+
+  override def rows(model: ModelDefinition): Vector[Row] =
+    tableFiles(model).toVector.flatMap { f =>
+      Using.resource(new ParquetBackend.ModelReader(f, model).build())(r =>
+        Iterator.continually(r.read()).takeWhile(_ != null)
+          .map(ParquetBackend.toRow(_, model)).toVector)
+    }
 }
 
 object ParquetBackend {

@@ -21,7 +21,8 @@ import graft.core.{ModelDefinition, PrimValue}
 trait StorageBackend {
   /** Full table scan; empty DataFrame with the model schema if the
     * model has no data yet (`read_db` missing-file semantics,
-    * `json/mod.rs:45-72`). */
+    * `json/mod.rs:45-72`). This is the handle for Spark consumers;
+    * serving reads the whole table through [[rows]]. */
   def table(model: ModelDefinition): DataFrame
 
   /** Exactly the records of the partition `v` maps to (see above). */
@@ -39,6 +40,13 @@ trait StorageBackend {
   def lookup(model: ModelDefinition, v: PrimValue): Option[Row] =
     slice(model, v).filter(col(model.primaryKey) === lit(v.raw))
       .head(1).headOption
+
+  /** Every record of the model as Rows in model-schema order, in no
+    * particular order; empty if the model has no data yet. Backends
+    * that can read the table without launching a Spark job should; this
+    * default collects [[table]] and launches one or more. */
+  def rows(model: ModelDefinition): Vector[Row] =
+    table(model).collect().toVector
 }
 
 object StorageBackend {

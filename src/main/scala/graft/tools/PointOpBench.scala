@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.core.Registry
 import graft.crud.CrudEngine
+import graft.graphql.Executor
 import graft.storage.ParquetBackend
 
 /** Point-op scaling evidence: bulk-load the orders table into the
@@ -20,9 +21,11 @@ import graft.storage.ParquetBackend
   * entire file). Evidence shape: with buckets fixed, latency grows
   * with table size; with table size fixed, WRITE latency shrinks as
   * bucket count grows (each write rewrites exactly one bucket);
-  * point reads open only the one bucket's files, on the driver. Each
-  * op's Spark jobs are counted with a listener, so the table shows
-  * which ops pay job-launch cost at all.
+  * point reads open only the one bucket's files, on the driver. The
+  * `scan` column is a GraphQL readMany of the whole table, run
+  * in-process (parse, validate, driver-side read of every bucket).
+  * Each op's Spark jobs are counted with a listener, so the table
+  * shows which ops pay job-launch cost at all.
   *
   * Usage: runMain graft.tools.PointOpBench [outFile]
   * (default POINTOPS.md; sf dirs fixed to the driver corpus).
@@ -32,7 +35,7 @@ object PointOpBench {
   /** Median latency (ms) and mean Spark jobs of one op kind. */
   private case class Op(ms: Double, jobs: Double)
   private case class Cell(rows: Long, buckets: Int, load: Double,
-      create: Op, read: Op, update: Op, delete: Op)
+      create: Op, read: Op, scan: Op, update: Op, delete: Op)
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "POINTOPS.md"
@@ -59,6 +62,7 @@ object PointOpBench {
     val cells = for (dir <- sfDirs; buckets <- bucketCounts) yield {
       val engine = new CrudEngine(spark, new ParquetBackend(spark,
         Files.createTempDirectory("pointop").toString, buckets))
+      val graphql = new Executor(new Registry(Vector(model)), engine)
       val orders = Tables.load(spark, dir, "orders")
         .select(col("o_orderkey").as("id"),
           col("o_orderstatus").as("status"),
@@ -81,14 +85,17 @@ object PointOpBench {
         Op(median(runs.map(_._1)), runs.map(_._2).sum.toDouble / runs.size)
       }
       val read = op(probes)(engine.readOne(model, _))
+      val scan = op(probes)(_ =>
+        graphql.handlePost("{ orders { id status total } }", None, Map.empty))
       val update = op(probes)(engine.updateOne(model, _, """{"status":"X"}"""))
       val create = op((1 to 5).map(i => (n * 10 + i).toString))(id =>
         engine.createOne(model, s"""{"id":$id,"status":"N"}"""))
       val delete = op(probes)(engine.deleteOne(model, _))
       System.err.println(f"[pointops] rows=$n%-8d buckets=$buckets%-3d " +
         f"load=$load%.2f create=${create.ms}%.1f read=${read.ms}%.2f " +
+        f"scan=${scan.ms}%.1f " +
         f"update=${update.ms}%.1f delete=${delete.ms}%.1f")
-      Cell(n, buckets, load, create, read, update, delete)
+      Cell(n, buckets, load, create, read, scan, update, delete)
     }
 
     val md = new StringBuilder
@@ -104,12 +111,13 @@ object PointOpBench {
       |
       |""".stripMargin
     md ++= "| rows | buckets | bulk_load | create | jobs | read | jobs " +
-      "| update | jobs | delete | jobs |\n"
-    md ++= "|---:|---:|---:|---:|---:|---:|---:|---:|---:|---:|---:|\n"
+      "| scan | jobs | update | jobs | delete | jobs |\n"
+    md ++= "|---:|---:|---:|---:|---:|---:|---:|---:|---:|---:|---:|---:|---:|\n"
     def fmt(o: Op): String = f"${o.ms}%.2f | ${o.jobs}%.1f"
     cells.foreach { c =>
       md ++= f"| ${c.rows} | ${c.buckets} | ${c.load}%.2f | ${fmt(c.create)} " +
-        s"| ${fmt(c.read)} | ${fmt(c.update)} | ${fmt(c.delete)} |\n"
+        s"| ${fmt(c.read)} | ${fmt(c.scan)} | ${fmt(c.update)} " +
+        s"| ${fmt(c.delete)} |\n"
     }
     md ++= "\n## Reading the grid\n\n"
     md ++= """- **Reads launch no Spark job**: `ParquetBackend.lookup` opens the
@@ -118,6 +126,14 @@ object PointOpBench {
       |  costs a few ms; it grows with the bucket's size, not the table's,
       |  so more buckets make reads cheaper too. Through a DataFrame the
       |  same read was bound by job launch at ~40 ms whatever the size.
+      |- **Scans launch no Spark job either**: a GraphQL readMany reads
+      |  every bucket's files on the calling thread (`ParquetBackend.rows`)
+      |  and decodes every record, so it costs time linear in the table
+      |  and launches nothing. On small tables the per-file open cost
+      |  dominates, so there more buckets make a scan slower. Through
+      |  `table().collect()` the same readMany ran a scan job and, with
+      |  more than 32 bucket directories, a job only to list them
+      |  (Spark's parallel-listing threshold).
       |- **Writes are O(bucket), not O(table)**: each write runs exactly
       |  one Spark job, the rewrite of the one bucket (the existence
       |  check is a `lookup`). At fixed table size create/update/delete

@@ -401,4 +401,64 @@ class ServerSpec extends AnyFunSuite {
     val (c4, b4) = req("GET", "/api/graphql")
     assert(c4 == 200 && b4.contains("<html>"), b4)
   }
+
+  test("keep-alive GETs are not held for the client's delayed ACK") {
+    assert(req("POST", "/api/rest/movie", """{"id":"nagle"}""")._1 == 201)
+    // one connection, one request at a time: the server's reply is two
+    // writes (headers, body), and without TCP_NODELAY the body waits
+    // for the ACK of the headers, which the client delays ~40 ms
+    val sock = new java.net.Socket("localhost", port)
+    try {
+      val out = sock.getOutputStream
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(sock.getInputStream))
+      def header(): String = {
+        val b = new StringBuilder
+        while (b.length < 4 || b.substring(b.length - 4) != "\r\n\r\n")
+          b += in.readByte().toChar
+        b.toString
+      }
+      val ms = (1 to 30).map { _ =>
+        val t0 = System.nanoTime()
+        out.write("GET /api/rest/movie/nagle HTTP/1.1\r\nHost: localhost\r\n\r\n"
+          .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+        out.flush()
+        val h = header()
+        val len = "(?i)content-length: *(\\d+)".r.findFirstMatchIn(h).get
+          .group(1).toInt
+        val body = new Array[Byte](len)
+        in.readFully(body)
+        val took = (System.nanoTime() - t0) / 1e6
+        assert(h.startsWith("HTTP/1.1 200") &&
+          new String(body, "UTF-8").contains("\"nagle\""), h)
+        took
+      }
+      val median = ms.sorted.apply(ms.size / 2)
+      assert(median < 20, f"median $median%.1f ms; all (ms): ${ms.map(_.round)}")
+    } finally sock.close()
+  }
+
+  test("a storage failure is a 400 envelope and one server log line") {
+    val dir = Files.createTempDirectory("rest-models")
+    Files.writeString(dir.resolve("movie.json"), movieJson)
+    val store = Files.createTempDirectory("rest-store")
+    val s = new Server(Registry.load(dir).toOption.get,
+      new CrudEngine(SparkSpec.spark,
+        new ParquetBackend(SparkSpec.spark, store.toString, buckets = 1)), 0)
+    s.start()
+    val bucket = Files.createDirectories(store.resolve("movies/_bucket=0"))
+    Files.writeString(bucket.resolve("part-0.parquet"), "not parquet")
+    val err = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    val (code, body) = try {
+      System.setErr(new java.io.PrintStream(err, true))
+      val r = client.send(HttpRequest.newBuilder(URI.create(
+        s"http://localhost:${s.boundPort}/api/rest/movie/x")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      (r.statusCode(), r.body())
+    } finally { System.setErr(saved); s.stop() }
+    assert(code == 400 && body.startsWith("""{"error":"""), body)
+    val line = """\[server\] GET /api/rest/movie/x failed: [\w.$]+"""
+    assert(err.toString.linesIterator.exists(_.matches(line)), err.toString)
+  }
 }

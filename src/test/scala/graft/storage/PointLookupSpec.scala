@@ -12,17 +12,19 @@ import graft.SparkSpec
 import graft.core._
 import graft.core.PrimValue.{BoolVal, FloatVal, IntVal, StrVal}
 import graft.crud.CrudEngine
+import graft.graphql.Executor
 import graft.tools.JobCount
 
-/** `ParquetBackend.lookup` — the driver-side point read — against the
-  * SPI's DataFrame default: same answer on every key, no Spark job. */
+/** `ParquetBackend.lookup` and `rows` — the driver-side point and
+  * whole-table reads — against the SPI's DataFrame defaults: same
+  * answers, no Spark job. */
 class PointLookupSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.spark
 
-  /** Forwards the four DataFrame methods only, so `lookup` is the SPI
-    * default (slice + filter + head), as in any decorator that does not
-    * forward it. */
-  private final class DefaultLookup(inner: StorageBackend)
+  /** Forwards the four DataFrame methods only, so `lookup` (slice +
+    * filter + head) and `rows` (collect the table) are the SPI defaults,
+    * as in any decorator that does not forward them. */
+  private final class SpiDefaults(inner: StorageBackend)
       extends StorageBackend {
     def table(m: ModelDefinition): DataFrame = inner.table(m)
     def slice(m: ModelDefinition, v: PrimValue): DataFrame = inner.slice(m, v)
@@ -57,10 +59,19 @@ class PointLookupSpec extends AnyFunSuite {
 
   private def assertParity(b: ParquetBackend, m: ModelDefinition,
       keys: Seq[PrimValue]): Unit = {
-    val default = new DefaultLookup(b)
+    val default = new SpiDefaults(b)
     keys.foreach { k =>
       assert(b.lookup(m, k) == default.lookup(m, k), s"key $k")
     }
+    assertRowsParity(b, m)
+  }
+
+  /** `rows` equals the collected table as a multiset. */
+  private def assertRowsParity(b: ParquetBackend, m: ModelDefinition): Unit = {
+    def bag(rs: Seq[Row]): Map[Row, Int] = rs.groupMapReduce(identity)(_ => 1)(_ + _)
+    val got = b.rows(m)
+    val want = b.table(m).collect().toSeq
+    assert(got.size == want.size && bag(got) == bag(want))
   }
 
   /** pk type → stored keys and absent keys. */
@@ -85,6 +96,7 @@ class PointLookupSpec extends AnyFunSuite {
         java.util.List.of(rows: _*), m.schema).repartition(3))
       assertParity(b, m, ids ++ absent)
       assert(ids.forall(b.lookup(m, _).isDefined))
+      assert(b.rows(m).size == ids.size)
     }
   }
 
@@ -136,7 +148,7 @@ class PointLookupSpec extends AnyFunSuite {
       b
     }
     val fast = new CrudEngine(spark, loaded())
-    val slow = new CrudEngine(spark, new DefaultLookup(loaded()))
+    val slow = new CrudEngine(spark, new SpiDefaults(loaded()))
 
     val reads = Seq("3", "17", "39", "40", "-5", "1000")
     val (fastReads, fastJobs) = JobCount(spark)(reads.map(fast.readOne(m, _)))
@@ -159,6 +171,39 @@ class PointLookupSpec extends AnyFunSuite {
       assert(a.isRight && a == b, name)
       assert(slowN - fastN == 1, s"$name: $slowN jobs before, $fastN now")
     }
+  }
+
+  test("rows is empty without a model directory or with only a temp dir") {
+    val m = model("Integer")
+    val root = Files.createTempDirectory("point-lookup")
+    val b = store(root)
+    assert(b.rows(m).isEmpty && b.table(m).collect().isEmpty)
+    // a write that died before its swap leaves a `.tmp-*` directory
+    // holding complete data files; they are not part of the table
+    spark.createDataFrame(java.util.List.of(row(1L, 1)), m.schema)
+      .write.parquet(root.resolve("items/.tmp-crashed").toString)
+    assert(b.rows(m).isEmpty && b.table(m).collect().isEmpty)
+    assertParity(b, m, Seq(IntVal(1)))
+  }
+
+  test("GraphQL readMany launches no Spark job") {
+    val m = model("Integer")
+    val b = store()
+    new CrudEngine(spark, b).bulkLoad(m, spark.createDataFrame(
+      java.util.List.of((0 until 40).map(i => row(i.toLong, i)): _*),
+      m.schema).repartition(3))
+    val fast = new CrudEngine(spark, b)
+    val slow = new CrudEngine(spark, new SpiDefaults(b))
+    val query = "{ items { id label counts scores } }"
+    def readMany(e: CrudEngine): String = Executor.toJson(
+      new Executor(new Registry(Vector(m)), e).handlePost(query, None, Map.empty))
+    val (fastJson, fastJobs) = JobCount(spark)(readMany(fast))
+    val (_, slowJobs) = JobCount(spark)(readMany(slow))
+    assert(fastJobs == 0)
+    assert(slowJobs >= 1)
+    assert(fastJson.startsWith("""{"data":{"items":[""") &&
+      """\{"id":""".r.findAllIn(fastJson).size == 40, fastJson)
+    assert(fast.readAll(m).toSet == slow.readAll(m).toSet)
   }
 
   test("slice and lookup leave the open file descriptor count flat") {
