@@ -112,8 +112,9 @@ final case class ModelDefinition(
   def isRequired(name: String): Boolean = required.contains(name)
   def pkType: AttrType = attrMap(primaryKey)
 
-  /** Spark schema: nullable iff not required; pk metadata recorded. */
-  def schema: StructType = StructType(attributes.map { case (n, t) =>
+  /** Spark schema: nullable iff not required; pk metadata recorded.
+    * Built once: storage stamps it on every row it decodes. */
+  val schema: StructType = StructType(attributes.map { case (n, t) =>
     StructField(n, t.sparkType, nullable = !required.contains(n),
       metadata = if (n == primaryKey)
         new MetadataBuilder().putBoolean("primary_key", true).build()

@@ -1,6 +1,6 @@
 package graft.crud
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.core._
@@ -12,10 +12,11 @@ import graft.storage.StorageBackend
   * Point reads and the existence checks of writes go through the
   * backend's `lookup` (for `ParquetBackend` a driver-side read of one
   * hash bucket that launches no Spark job), served whole-table reads
-  * through its `rows` (likewise no job there); merges rewrite the
-  * backend's pk *slice* (that one bucket), so no operation here is
-  * O(whole table) — unlike the reference, where every op deserializes
-  * and rewrites the entire store (`json/mod.rs:45-80`).
+  * through its `rows`, projected to the selected attributes (likewise
+  * no job there); merges rewrite the backend's pk *slice* (that one
+  * bucket), so no operation here is O(whole table) — unlike the
+  * reference, where every op deserializes and rewrites the entire
+  * store (`json/mod.rs:45-80`).
   *
   * Writes are serialized per model (single-writer discipline): the
   * reference has unsynchronized read-modify-write races across its HTTP
@@ -125,11 +126,13 @@ final class CrudEngine(spark: SparkSession, backend: StorageBackend,
     * limit). */
   def readMany(m: ModelDefinition): DataFrame = backend.table(m)
 
-  /** readMany as served: every record of the model, through the
-    * backend's `rows` (for `ParquetBackend` a driver-side read of
-    * every bucket that launches no Spark job). */
-  def readAll(m: ModelDefinition): Vector[Record] =
-    backend.rows(m).map(Records.fromRow(_, m))
+  /** readMany as served: every record of the model as Rows holding
+    * exactly `columns` in that order, through the backend's `rows` (for
+    * `ParquetBackend` a driver-side read of every bucket that decodes
+    * only those columns and launches no Spark job). Rows, not Records:
+    * the caller renders the cells it asked for (`Records.cell`). */
+  def readAll(m: ModelDefinition, columns: Seq[String]): Vector[Row] =
+    backend.rows(m, columns)
 
   /** Bulk load (engine extension): validated DataFrame → table.
     * Constraints are enforced the Spark way — one declarative

@@ -141,27 +141,31 @@ object Records {
   /** Spark Row → Record (attribute order from the model). */
   def fromRow(row: Row, model: ModelDefinition): Record =
     model.attributes.zipWithIndex.map { case ((n, t), i) =>
-      val v: TrueValue =
-        if (row.isNullAt(i)) TrueValue.Null
-        else t match {
-          case AttrType.Primitive(PrimitiveType.PInteger) =>
-            TrueValue.Prim(PrimValue.IntVal(row.getLong(i)))
-          case AttrType.Primitive(PrimitiveType.PString) =>
-            TrueValue.Prim(PrimValue.StrVal(row.getString(i)))
-          case AttrType.Primitive(PrimitiveType.PBoolean) =>
-            TrueValue.Prim(PrimValue.BoolVal(row.getBoolean(i)))
-          case AttrType.Primitive(PrimitiveType.PFloat) =>
-            TrueValue.Prim(PrimValue.FloatVal(row.getDouble(i)))
-          case AttrType.ArrayOf(p) =>
-            TrueValue.Arr(row.getSeq[Any](i).toVector.map(e => (p match {
-              case PrimitiveType.PInteger => PrimValue.IntVal(e.asInstanceOf[Long])
-              case PrimitiveType.PString  => PrimValue.StrVal(e.asInstanceOf[String])
-              case PrimitiveType.PBoolean => PrimValue.BoolVal(e.asInstanceOf[Boolean])
-              case PrimitiveType.PFloat   => PrimValue.FloatVal(e.asInstanceOf[Double])
-            }): PrimValue))
-        }
-      n -> v
+      n -> cell(row, i, t)
     }.toMap
+
+  /** Column `i` of `row`, holding an attribute of type `t`, as a typed
+    * value — the one Row → value rule, shared by [[fromRow]] and
+    * GraphQL's rendering of projected rows. */
+  def cell(row: Row, i: Int, t: AttrType): TrueValue =
+    if (row.isNullAt(i)) TrueValue.Null
+    else t match {
+      case AttrType.Primitive(PrimitiveType.PInteger) =>
+        TrueValue.Prim(PrimValue.IntVal(row.getLong(i)))
+      case AttrType.Primitive(PrimitiveType.PString) =>
+        TrueValue.Prim(PrimValue.StrVal(row.getString(i)))
+      case AttrType.Primitive(PrimitiveType.PBoolean) =>
+        TrueValue.Prim(PrimValue.BoolVal(row.getBoolean(i)))
+      case AttrType.Primitive(PrimitiveType.PFloat) =>
+        TrueValue.Prim(PrimValue.FloatVal(row.getDouble(i)))
+      case AttrType.ArrayOf(p) =>
+        TrueValue.Arr(row.getSeq[Any](i).toVector.map(e => (p match {
+          case PrimitiveType.PInteger => PrimValue.IntVal(e.asInstanceOf[Long])
+          case PrimitiveType.PString  => PrimValue.StrVal(e.asInstanceOf[String])
+          case PrimitiveType.PBoolean => PrimValue.BoolVal(e.asInstanceOf[Boolean])
+          case PrimitiveType.PFloat   => PrimValue.FloatVal(e.asInstanceOf[Double])
+        }): PrimValue))
+    }
 
   /** Ordered JSON serialization of a record (schema order, pk first not
     * required here — REST uses full schema order). */

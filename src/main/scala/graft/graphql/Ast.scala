@@ -83,6 +83,9 @@ object Ast {
   final case class GScalar(v: TrueValue) extends GValue
   final case class GObj(data: GData) extends GValue
   final case class GObjs(items: Vector[GData]) extends GValue
+  /** A value rendered to JSON already (a projected record or array of
+    * records), emitted verbatim. */
+  final case class GJson(json: String) extends GValue
 
   final case class GData(fields: Vector[(String, GValue)]) {
     def get(key: String): Option[GValue] =

@@ -1,5 +1,7 @@
 package graft.graphql
 
+import org.apache.spark.sql.Row
+
 import graft.core._
 import graft.crud.{CrudEngine, Records}
 import graft.crud.Records.Record
@@ -17,19 +19,27 @@ import graft.graphql.Ast._
   *    fields still produce `data` (partial results);
   *  - selection-set projection in *query order*, response-key aliases
   *    honored for scalar fields, fragment spreads flattened inline,
-  *    `__typename` injected from the resolver's type;
+  *    `__typename` injected from the resolver's type (keyed by its
+  *    name even when aliased), duplicate keys kept;
   *  - `variables` are substituted when provided (the reference parses
   *    but ignores them, `graphql.rs:164` — a documented fidelity
   *    upgrade, since dropping them silently corrupts queries).
   *
+  * A model-typed field (readOne, readMany, the three mutations, a
+  * subscription event) is projected by a [[Executor.RecordProjection]]
+  * compiled once per request from its selection set, which renders the
+  * field's JSON straight from the record or rows; `project` and
+  * `GData` serve only introspection's nested objects.
+  *
   * Extensions: `readMany` (plural-camel root field, every record
-  * through `CrudEngine.readAll`, which for the Parquet store launches
-  * no Spark job; `todo!()` in the reference) and root-level fragment
-  * spreads (also `todo!()` there) are implemented.
+  * through `CrudEngine.readAll`, which reads only the selected
+  * attributes and, for the Parquet store, launches no Spark job;
+  * `todo!()` in the reference) and root-level fragment spreads (also
+  * `todo!()` there) are implemented.
   */
 final class Executor(registry: Registry, engine: CrudEngine) {
 
-  import Executor.{CrudOut, ErrOut, ManyOut, OneOut}
+  import Executor.{RecordProjection, fieldsOf}
 
   val schema: Schema = SchemaGen.build(registry)
 
@@ -66,7 +76,7 @@ final class Executor(registry: Registry, engine: CrudEngine) {
     var data = GData.empty
     var errors = Vector.empty[GqlError]
     // root-level fragments flattened (reference: todo!(), here: uniform)
-    val rootFields: Vector[FieldSel] = flattenRoot(op.selections, doc)
+    val rootFields: Vector[FieldSel] = fieldsOf(op.selections, doc)
     rootFields.foreach { field =>
       field.name match {
         case "__schema" =>
@@ -87,21 +97,10 @@ final class Executor(registry: Registry, engine: CrudEngine) {
         case "__typename" =>
           data = data.add(field.name, GScalar(TrueValue.Prim(
             PrimValue.StrVal(op.opType.defaultTypeName))))
-        case resolverName =>
-          resolveCrud(op.opType, field, variables) match {
-            case OneOut(rec, tyName) =>
-              val fields = GData(rec.toVector.map { case (k, v) =>
-                k -> (GScalar(v): GValue)
-              })
-              data = data.add(field.responseKey,
-                GObj(project(field.selections, Named(tyName), fields, doc)))
-            case ManyOut(recs, tyName) =>
-              val items = recs.map(r => project(field.selections,
-                Named(tyName), GData(r.toVector.map { case (k, v) =>
-                  k -> (GScalar(v): GValue)
-                }), doc))
-              data = data.add(field.responseKey, GObjs(items))
-            case ErrOut(msg) => errors :+= GqlError(msg)
+        case _ =>
+          resolveCrud(op.opType, field, variables, doc) match {
+            case Right(json) => data = data.add(field.responseKey, GJson(json))
+            case Left(msg) => errors :+= GqlError(msg)
           }
       }
     }
@@ -110,15 +109,6 @@ final class Executor(registry: Registry, engine: CrudEngine) {
     else GqlResult(Some(data), errors)
   }
 
-
-  private def flattenRoot(sels: Vector[Selection], doc: Document)
-      : Vector[FieldSel] = sels.flatMap {
-    case f: FieldSel => Vector(f)
-    case FragmentSpread(n) =>
-      doc.fragments.get(n).map(f => flattenRoot(f.selections, doc))
-        .getOrElse(Vector.empty)
-    case InlineFragment(_, s) => flattenRoot(s, doc)
-  }
 
   private def substitute(v: GqlValue, vars: Map[String, GqlValue])
       : GqlValue = v match {
@@ -153,9 +143,11 @@ final class Executor(registry: Registry, engine: CrudEngine) {
   }
 
   /** Dispatch by name prefix (`execute_operation`,
-    * `graphql.rs:335-384`) and call the Spark CRUD ops. */
+    * `graphql.rs:335-384`), call the Spark CRUD ops and render the
+    * field's JSON through its projection; `Left` is the field's error. */
   private def resolveCrud(opType: OpType, field: FieldSel,
-      variables: Map[String, GqlValue]): CrudOut = {
+      variables: Map[String, GqlValue], doc: Document)
+      : Either[String, String] = {
     val args = field.args.map { case (n, v) =>
       n -> substitute(v, variables)
     }
@@ -163,14 +155,10 @@ final class Executor(registry: Registry, engine: CrudEngine) {
       JsonUtil.quote(n) + ":" + valueJson(v)
     }.mkString("{", ",", "}")
     def withModel(modelName: String)(
-        f: ModelDefinition => Either[String, Record]): CrudOut =
-      registry.lookupSingular(modelName.head.toLower + modelName.tail) match {
-        case Left(err) => ErrOut(err)
-        case Right(m) => f(m) match {
-          case Left(e) => ErrOut(e)
-          case Right(rec) => OneOut(rec, SchemaGen.typeName(m))
-        }
-      }
+        f: ModelDefinition => Either[String, Record]): Either[String, String] =
+      registry.lookupSingular(s"${modelName.head.toLower}${modelName.tail}")
+        .flatMap(m => f(m).map(
+          new RecordProjection(m, field.selections, doc).ofRecord))
     opType match {
       case Query =>
         if (field.name.startsWith("readOne"))
@@ -178,10 +166,9 @@ final class Executor(registry: Registry, engine: CrudEngine) {
             engine.readOne(m, idString(args.head._2))
           }
         else // readMany: plural camel root field
-          registry.lookup(field.name) match {
-            case Left(err) => ErrOut(err)
-            case Right(m) =>
-              ManyOut(engine.readAll(m), SchemaGen.typeName(m))
+          registry.lookup(field.name).map { m =>
+            val p = new RecordProjection(m, field.selections, doc)
+            p.ofRows(engine.readAll(m, p.columns))
           }
       case Mutation =>
         if (field.name.startsWith("addOne"))
@@ -198,12 +185,12 @@ final class Executor(registry: Registry, engine: CrudEngine) {
           withModel(field.name.stripPrefix("deleteOne")) { m =>
             engine.deleteOne(m, idString(args.head._2))
           }
-        else ErrOut(s"""unknown mutation "${field.name}"""")
+        else Left(s"""unknown mutation "${field.name}"""")
       case Subscription =>
         // valid documents reach here only via the request/response
         // endpoint; the streaming transports resolve subscriptions
         // through subscriptionPlan instead
-        ErrOut("subscription operations must use the event-stream " +
+        Left("subscription operations must use the event-stream " +
           "transport (GET /api/subscribe/{model}, or POST /api/graphql " +
           "with the subscription served as text/event-stream)")
     }
@@ -226,7 +213,7 @@ final class Executor(registry: Registry, engine: CrudEngine) {
           case Right(op) if op.opType != Subscription =>
             Left("operation is not a subscription")
           case Right(op) =>
-            flattenRoot(op.selections, doc) match {
+            fieldsOf(op.selections, doc) match {
               case Vector(field) =>
                 registry.lookup(field.name).map(m =>
                   Executor.SubscriptionPlan(m, field, doc))
@@ -237,15 +224,11 @@ final class Executor(registry: Registry, engine: CrudEngine) {
     }
 
   /** One subscription event: the changed record projected through the
-    * plan's selection set, wrapped as a GraphQL `data` payload. */
-  def projectEvent(plan: Executor.SubscriptionPlan, rec: Record): GData = {
-    val fields = GData(rec.toVector.map { case (k, v) =>
-      k -> (GScalar(v): GValue)
-    })
+    * plan's selection set, wrapped as a GraphQL `data` payload.
+    * Attributes the record lacks are left out. */
+  def projectEvent(plan: Executor.SubscriptionPlan, rec: Record): GData =
     GData.empty.add(plan.field.responseKey,
-      GObj(project(plan.field.selections,
-        Named(SchemaGen.typeName(plan.model)), fields, plan.doc)))
-  }
+      GJson(plan.projection.ofRecord(rec)))
 
   /** Streaming execution: the model's changelog as a Structured
     * Streaming DataFrame of (seq, op, data) where `data` is the
@@ -258,7 +241,7 @@ final class Executor(registry: Registry, engine: CrudEngine) {
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val m = plan.model
-    val cols = flattenRoot(plan.field.selections, plan.doc).map { sel =>
+    val cols = fieldsOf(plan.field.selections, plan.doc).map { sel =>
       if (sel.name == "__typename")
         lit(SchemaGen.typeName(m)).as(sel.name)
       else col(s"rec.${sel.name}").as(
@@ -271,10 +254,11 @@ final class Executor(registry: Registry, engine: CrudEngine) {
           java.util.Map.of("ignoreNullFields", "false")).as("data"))
   }
 
-  /** `resolve_selection_set_order` (`graphql.rs:415-442`): project in
-    * query order; aliases for scalars; nested objects keyed by field
-    * name (reference quirk preserved); fragments flattened;
-    * `__typename` injected from the resolver type. */
+  /** `resolve_selection_set_order` (`graphql.rs:415-442`) over
+    * introspection's nested objects: project in query order; aliases
+    * for scalars; nested objects keyed by field name (reference quirk
+    * preserved); fragments flattened; `__typename` injected from the
+    * resolver type. Records go through [[Executor.RecordProjection]]. */
   private def project(sels: Vector[Selection], resolverTy: GqlType,
       fieldData: GData, doc: Document): GData = {
     var out = GData.empty
@@ -310,15 +294,77 @@ object Executor {
   /** A resolved subscription: which model's changelog to consume and
     * how to project each change event. */
   final case class SubscriptionPlan(model: ModelDefinition,
-      field: Ast.FieldSel, doc: Ast.Document)
+      field: Ast.FieldSel, doc: Ast.Document) {
+    private[graphql] val projection =
+      new RecordProjection(model, field.selections, doc)
+  }
 
-  // resolver results: one record, many records, or an error
-  private[graphql] sealed trait CrudOut
-  private[graphql] final case class OneOut(rec: Record, ty: String)
-      extends CrudOut
-  private[graphql] final case class ManyOut(recs: Vector[Record], ty: String)
-      extends CrudOut
-  private[graphql] final case class ErrOut(msg: String) extends CrudOut
+  /** Fields of a selection set with named and inline fragments spread
+    * in place, in query order. */
+  private def fieldsOf(sels: Vector[Selection], doc: Document)
+      : Vector[FieldSel] = sels.flatMap {
+    case f: FieldSel => Vector(f)
+    case FragmentSpread(n) =>
+      doc.fragments.get(n).map(f => fieldsOf(f.selections, doc))
+        .getOrElse(Vector.empty)
+    case InlineFragment(_, s) => fieldsOf(s, doc)
+  }
+
+  /** A model-typed field's selection set compiled into a flat record
+    * projection: one slot per selected attribute, under its response
+    * key (scalar aliases honoured), and one per `__typename`, keyed by
+    * its name even when aliased; query order, duplicate keys kept.
+    * Selections that name no attribute of the model produce nothing.
+    * Renders the field's JSON straight from a Record or from Rows of
+    * [[columns]], with no per-row `GData`. */
+  private[graphql] final class RecordProjection(m: ModelDefinition,
+      sels: Vector[Selection], doc: Document) {
+    private val fields = fieldsOf(sels, doc).filter(f =>
+      f.name == "__typename" || m.attrType(f.name).isDefined)
+
+    /** The selected attributes in first-use order: the column list a
+      * readMany pushes down to storage. */
+    val columns: Vector[String] =
+      fields.map(_.name).filter(_ != "__typename").distinct
+
+    /** Per slot: its JSON key and its column, or -1 for `__typename`. */
+    private val slots: Vector[(String, Int)] = fields.map { f =>
+      if (f.name == "__typename") (JsonUtil.quote(f.name) + ":", -1)
+      else (JsonUtil.quote(f.responseKey) + ":", columns.indexOf(f.name))
+    }
+    private val types = columns.map(m.attrType(_).get)
+    private val typename =
+      TrueValue.Prim(PrimValue.StrVal(SchemaGen.typeName(m)))
+
+    /** The record as a JSON object; attributes it lacks are left out. */
+    def ofRecord(rec: Record): String =
+      render(new StringBuilder, c => rec.get(columns(c))).toString
+
+    /** One JSON object per row, as a JSON array; rows hold [[columns]]. */
+    def ofRows(rows: Vector[Row]): String = {
+      val sb = new StringBuilder("[")
+      rows.iterator.zipWithIndex.foreach { case (r, n) =>
+        if (n > 0) sb += ','
+        render(sb, c => Some(Records.cell(r, c, types(c))))
+      }
+      (sb += ']').toString
+    }
+
+    /** One JSON object; `value` gives a column's value, if present. */
+    private def render(sb: StringBuilder, value: Int => Option[TrueValue])
+        : StringBuilder = {
+      sb += '{'
+      var first = true
+      slots.foreach { case (key, c) =>
+        (if (c < 0) Some(typename) else value(c)).foreach { v =>
+          if (!first) sb += ','
+          first = false
+          sb ++= key ++= Records.valueJson(v)
+        }
+      }
+      sb += '}'
+    }
+  }
 
   /** Ordered JSON serialization of results — `Data` keeps insertion
     * order (`graphql.rs:66-97`), so this must NOT go through an
@@ -339,6 +385,7 @@ object Executor {
     }.mkString("{", ",", "}")
 
   private def valueJson(v: GValue): String = v match {
+    case GJson(json) => json
     case GScalar(t) => Records.valueJson(t)
     case GObj(d) => dataJson(d)
     case GObjs(items) => items.map(dataJson).mkString("[", ",", "]")

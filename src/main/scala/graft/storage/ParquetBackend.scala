@@ -18,6 +18,7 @@ import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{AttrType, ModelDefinition, PrimValue, PrimitiveType}
 
@@ -37,8 +38,9 @@ import graft.core.{AttrType, ModelDefinition, PrimValue, PrimitiveType}
   * A point read (`lookup`) opens the one bucket's files with a
   * pk-equality filter that skips row groups whose statistics exclude
   * the key, and stops at the first hit; a whole-table read (`rows`,
-  * GraphQL readMany) decodes every bucket's files. `table` and writes
-  * stay DataFrames.
+  * GraphQL readMany) opens every bucket's files with the requested
+  * columns as the read schema, so Parquet decodes no other column.
+  * `table` and writes stay DataFrames.
   */
 final class ParquetBackend(spark: SparkSession, root: String,
     buckets: Int = 64)
@@ -47,17 +49,20 @@ final class ParquetBackend(spark: SparkSession, root: String,
   override def lookup(model: ModelDefinition, v: PrimValue): Option[Row] = {
     val filter = FilterCompat.get(ParquetBackend.pkEquals(model.primaryKey, v))
     bucketFiles(model, v).iterator.flatMap { f =>
-      Using.resource(new ParquetBackend.ModelReader(f, model)
+      Using.resource(new ParquetBackend.ModelReader(f, model.schema)
         .withFilter(filter).build())(r => Option(r.read()))
-    }.nextOption().map(ParquetBackend.toRow(_, model))
+    }.nextOption().map(ParquetBackend.toRow(_, model, model.schema))
   }
 
-  override def rows(model: ModelDefinition): Vector[Row] =
+  override def rows(model: ModelDefinition, columns: Seq[String])
+      : Vector[Row] = {
+    val schema = StructType(columns.map(model.schema(_)))
     tableFiles(model).toVector.flatMap { f =>
-      Using.resource(new ParquetBackend.ModelReader(f, model).build())(r =>
+      Using.resource(new ParquetBackend.ModelReader(f, schema).build())(r =>
         Iterator.continually(r.read()).takeWhile(_ != null)
-          .map(ParquetBackend.toRow(_, model)).toVector)
+          .map(ParquetBackend.toRow(_, model, schema)).toVector)
     }
+  }
 }
 
 object ParquetBackend {
@@ -72,37 +77,39 @@ object ParquetBackend {
       FilterApi.eq(FilterApi.doubleColumn(pk), java.lang.Double.valueOf(x))
   }
 
-  /** Reads one local file as `Group`s, projected to the model's
-    * columns that the file has. No Hadoop `FileSystem` is involved. */
-  private final class ModelReader(f: Path, m: ModelDefinition)
+  /** Reads one local file as `Group`s, projected to the columns of
+    * `schema` that the file has. No Hadoop `FileSystem` is involved. */
+  private final class ModelReader(f: Path, schema: StructType)
       extends ParquetReader.Builder[Group](new LocalInputFile(f),
         new PlainParquetConfiguration()) {
     override protected def getReadSupport(): ReadSupport[Group] =
       new GroupReadSupport {
         override def init(ctx: InitContext): ReadSupport.ReadContext = {
           val file = ctx.getFileSchema
+          val names = schema.fieldNames.toSet
           new ReadSupport.ReadContext(new MessageType(file.getName,
-            file.getFields.asScala.filter(t => m.attrType(t.getName).isDefined)
-              .asJava))
+            file.getFields.asScala.filter(t => names(t.getName)).asJava))
         }
       }
   }
 
-  /** A record in model-schema order; attributes the file lacks are
-    * null, as in `spark.read.schema(model.schema)`. */
-  private def toRow(g: Group, m: ModelDefinition): Row = {
+  /** A record as the columns of `schema` (a projection of the model's
+    * schema), in its order; columns the file lacks are null, as in
+    * `spark.read.schema(model.schema)`. */
+  private def toRow(g: Group, m: ModelDefinition, schema: StructType): Row = {
     val t = g.getType
-    new GenericRowWithSchema(m.attributes.map { case (name, ty) =>
+    new GenericRowWithSchema(schema.fields.map { f =>
+      val name = f.name
       if (!t.containsField(name)) null
       else {
         val i = t.getFieldIndex(name)
         if (g.getFieldRepetitionCount(i) == 0) null
-        else ty match {
+        else m.attrType(name).get match {
           case AttrType.Primitive(p) => value(g, i, p)
           case AttrType.ArrayOf(p) => elements(g.getGroup(i, 0), p)
         }
       }
-    }.toArray, m.schema)
+    }, schema)
   }
 
   /** A LIST group's elements, in the three-level layout Spark writes

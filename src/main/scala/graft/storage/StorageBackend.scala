@@ -41,12 +41,14 @@ trait StorageBackend {
     slice(model, v).filter(col(model.primaryKey) === lit(v.raw))
       .head(1).headOption
 
-  /** Every record of the model as Rows in model-schema order, in no
-    * particular order; empty if the model has no data yet. Backends
-    * that can read the table without launching a Spark job should; this
-    * default collects [[table]] and launches one or more. */
-  def rows(model: ModelDefinition): Vector[Row] =
-    table(model).collect().toVector
+  /** Every record of the model, projected to `columns` (attribute
+    * names): each Row holds exactly those columns in that order. Records
+    * come in no particular order; empty if the model has no data yet.
+    * Backends that can read the table without launching a Spark job,
+    * decoding only the requested columns, should; this default collects
+    * [[table]] and launches one or more. */
+  def rows(model: ModelDefinition, columns: Seq[String]): Vector[Row] =
+    table(model).select(columns.map(col): _*).collect().toVector
 }
 
 object StorageBackend {

@@ -168,6 +168,84 @@ class GraphqlSpec extends AnyFunSuite {
     assert(many == """{"data":{"clonedMovies":[{"id":1,"name":"c"}]}}""", many)
   }
 
+  /** Movies 1–3 land in buckets 1–3 of four, so readMany lists them in
+    * id order: arrays, an empty array, null optionals. */
+  lazy val shapes: Executor = {
+    val e = GqlFixture.freshExecutor()
+    Seq(
+      """addOneMovie(id:1, name:"Heat", recommended:true, year:1995, actors:["Al", "Bob \"B\""])""",
+      """addOneMovie(id:2, name:"Ronin", recommended:false, actors:[])""",
+      """addOneMovie(id:3, name:"Tab\tbed", recommended:true, year:2001)"""
+    ).foreach { add =>
+      val r = Executor.toJson(e.handlePost(s"mutation { $add { id } }", None, Map.empty))
+      assert(r.startsWith("""{"data""""), r)
+    }
+    e
+  }
+
+  def runShapes(q: String): String =
+    Executor.toJson(shapes.handlePost(q, None, Map.empty))
+
+  test("readMany: aliases, fragments, __typename, duplicates, arrays, nulls") {
+    val r = runShapes(
+      """{ movies { key: id name ...extra ... on Movie { actors } t: __typename
+        |__typename year id ... { name } } }
+        |fragment extra on Movie { recommended theYear: year }""".stripMargin)
+    assert(r == "{\"data\":{\"movies\":[" +
+      """{"key":1,"name":"Heat","recommended":true,"theYear":1995,""" +
+      """"actors":["Al","Bob \"B\""],"__typename":"Movie","__typename":"Movie",""" +
+      """"year":1995,"id":1,"name":"Heat"},""" +
+      """{"key":2,"name":"Ronin","recommended":false,"theYear":null,""" +
+      """"actors":[],"__typename":"Movie","__typename":"Movie",""" +
+      """"year":null,"id":2,"name":"Ronin"},""" +
+      """{"key":3,"name":"Tab\tbed","recommended":true,"theYear":2001,""" +
+      """"actors":null,"__typename":"Movie","__typename":"Movie",""" +
+      """"year":2001,"id":3,"name":"Tab\tbed"}]}}""", r)
+  }
+
+  test("readMany: one model under two aliases, root fragments, __typename only") {
+    val r = runShapes(
+      """query { a: movies { id } ...R b: movies { name theId: id } }
+        |fragment R on Query { movies { __typename } }""".stripMargin)
+    assert(r == """{"data":{"a":[{"id":1},{"id":2},{"id":3}],""" +
+      """"movies":[{"__typename":"Movie"},{"__typename":"Movie"},{"__typename":"Movie"}],""" +
+      """"b":[{"name":"Heat","theId":1},{"name":"Ronin","theId":2},""" +
+      """{"name":"Tab\tbed","theId":3}]}}""", r)
+  }
+
+  test("readOne and mutations: aliases, fragments, __typename, arrays, nulls") {
+    val r = runShapes(
+      """query { x: readOneMovie(id:2) { ...F n: name actors t: __typename }
+        |y: readOneMovie(id:3) { actors year ... on Movie { id id } }
+        |z: readOneMovie(id:1) { actors } }
+        |fragment F on Movie { year recommended }""".stripMargin)
+    assert(r == """{"data":{"x":{"year":null,"recommended":false,"n":"Ronin",""" +
+      """"actors":[],"__typename":"Movie"},""" +
+      """"y":{"actors":null,"year":2001,"id":3,"id":3},""" +
+      """"z":{"actors":["Al","Bob \"B\""]}}}""", r)
+    val up = runShapes(
+      """mutation { updateOneMovie(id:2, actors:["Cy"]) { ...F t: __typename } }
+        |fragment F on Movie { theActors: actors year }""".stripMargin)
+    assert(up == """{"data":{"updateOneMovie":{"theActors":["Cy"],""" +
+      """"year":null,"__typename":"Movie"}}}""", up)
+    val add = runShapes(
+      """mutation { addOneMovie(id:4, name:"N", recommended:true) { __typename actors ... { i: id } } }""")
+    assert(add == """{"data":{"addOneMovie":{"__typename":"Movie","actors":null,"i":4}}}""", add)
+    val del = runShapes("""mutation { deleteOneMovie(id:4) { name year } }""")
+    assert(del == """{"data":{"deleteOneMovie":{"name":"N","year":null}}}""", del)
+  }
+
+  test("subscription events skip attributes the changed record lacks") {
+    val plan = shapes.subscriptionPlan(
+      """subscription { movies { id year ...F k: __typename } }
+        |fragment F on Movie { theName: name }""".stripMargin, None).toOption.get
+    val movie = plan.model
+    val rec = graft.crud.Records.parseRecord(
+      """{"id":1,"name":"Heat"}""", movie, Some(Seq.empty)).toOption.get
+    assert(Executor.dataJson(shapes.projectEvent(plan, rec)) ==
+      """{"movies":{"id":1,"theName":"Heat","__typename":"Movie"}}""")
+  }
+
   test("fragment cycles are rejected, not executed") {
     val r = run(
       """query { readOneMovie(id:5) { ...A } }

@@ -22,7 +22,7 @@ class PointLookupSpec extends AnyFunSuite {
   lazy val spark = SparkSpec.spark
 
   /** Forwards the four DataFrame methods only, so `lookup` (slice +
-    * filter + head) and `rows` (collect the table) are the SPI defaults,
+    * filter + head) and `rows` (select + collect) are the SPI defaults,
     * as in any decorator that does not forward them. */
   private final class SpiDefaults(inner: StorageBackend)
       extends StorageBackend {
@@ -66,12 +66,21 @@ class PointLookupSpec extends AnyFunSuite {
     assertRowsParity(b, m)
   }
 
-  /** `rows` equals the collected table as a multiset. */
+  private def allColumns(m: ModelDefinition): Seq[String] =
+    m.attributes.map(_._1)
+
+  /** `rows(m, cols)` equals `table(m).select(cols)` collected, as a
+    * multiset, for every column, a proper subset and every column
+    * reordered; its rows hold exactly `cols`, in that order. */
   private def assertRowsParity(b: ParquetBackend, m: ModelDefinition): Unit = {
     def bag(rs: Seq[Row]): Map[Row, Int] = rs.groupMapReduce(identity)(_ => 1)(_ + _)
-    val got = b.rows(m)
-    val want = b.table(m).collect().toSeq
-    assert(got.size == want.size && bag(got) == bag(want))
+    val all = allColumns(m)
+    Seq(all, Seq("labels", "id", "label", "score"), all.reverse).foreach { cols =>
+      val got = b.rows(m, cols)
+      val want = b.table(m).select(cols.map(col): _*).collect().toSeq
+      assert(got.size == want.size && bag(got) == bag(want), cols)
+      assert(got.forall(_.schema.fieldNames.toSeq == cols), cols)
+    }
   }
 
   /** pk type → stored keys and absent keys. */
@@ -96,7 +105,7 @@ class PointLookupSpec extends AnyFunSuite {
         java.util.List.of(rows: _*), m.schema).repartition(3))
       assertParity(b, m, ids ++ absent)
       assert(ids.forall(b.lookup(m, _).isDefined))
-      assert(b.rows(m).size == ids.size)
+      assert(b.rows(m, allColumns(m)).size == ids.size)
     }
   }
 
@@ -177,12 +186,12 @@ class PointLookupSpec extends AnyFunSuite {
     val m = model("Integer")
     val root = Files.createTempDirectory("point-lookup")
     val b = store(root)
-    assert(b.rows(m).isEmpty && b.table(m).collect().isEmpty)
+    assert(b.rows(m, allColumns(m)).isEmpty && b.table(m).collect().isEmpty)
     // a write that died before its swap leaves a `.tmp-*` directory
     // holding complete data files; they are not part of the table
     spark.createDataFrame(java.util.List.of(row(1L, 1)), m.schema)
       .write.parquet(root.resolve("items/.tmp-crashed").toString)
-    assert(b.rows(m).isEmpty && b.table(m).collect().isEmpty)
+    assert(b.rows(m, allColumns(m)).isEmpty && b.table(m).collect().isEmpty)
     assertParity(b, m, Seq(IntVal(1)))
   }
 
@@ -203,7 +212,8 @@ class PointLookupSpec extends AnyFunSuite {
     assert(slowJobs >= 1)
     assert(fastJson.startsWith("""{"data":{"items":[""") &&
       """\{"id":""".r.findAllIn(fastJson).size == 40, fastJson)
-    assert(fast.readAll(m).toSet == slow.readAll(m).toSet)
+    val cols = Seq("id", "label", "counts", "scores")
+    assert(fast.readAll(m, cols).toSet == slow.readAll(m, cols).toSet)
   }
 
   test("slice and lookup leave the open file descriptor count flat") {
