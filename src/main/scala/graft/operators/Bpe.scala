@@ -26,7 +26,8 @@ import graft.operators.TextAnalysis.tokensSql
   *    3×`replace` rewrite of the symbol strings. Driver state is the
   *    merge list itself — K rows;
   *  - per-round `localCheckpoint` truncates lineage so round k+1's
-  *    plan does not grow with k (the q45/q65/q70 iteration pattern).
+  *    plan does not grow with k (the q65/q70/ccContract iteration
+  *    pattern).
   *
   * Determinism/oracle strategy (everything engine-exact):
   *  - words are symbolized as space-joined characters with a leading/

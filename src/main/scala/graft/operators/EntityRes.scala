@@ -424,8 +424,15 @@ object EntityRes {
       .select(col("nation"), col("bal_bucket"), col("bn"),
         col("m").as("sample_mod"), col("truth_pairs"),
         col("found_pairs"), col("missed_pairs"), col("recall_e6"))
-    val full = unordered.orderBy(col("nation"), col("bal_bucket"))
-    Map("bnT" -> bnT, "elig" -> elig, "pairs" -> pairs, "full" -> full)
+    // Block-grain result: sorted in ONE partition, not by a global
+    // orderBy — its range exchange re-ran the whole pair stage (the
+    // broadcast join, the intersect kernel and the aggregate share
+    // one stage) to sample bounds: two single-task jobs of ~0.6 s
+    // at sf0.01
+    val full = unordered.repartition(1)
+      .sortWithinPartitions(col("nation"), col("bal_bucket"))
+    Map("bnT" -> bnT, "elig" -> elig, "pairs" -> pairs,
+      "unordered" -> unordered, "full" -> full)
   }
 
   val q176ErRecallOracle: String = {
@@ -544,13 +551,20 @@ object EntityRes {
       .distinct()
       .repartition(col("u")).localCheckpoint(true)
 
-  /** Connected components by ITERATED hash-to-min contraction: each
-    * pass maps every node to its closed-neighborhood hash-min member
-    * and projects the edge set through the mapping; components have
-    * fully contracted when no inter-group edge survives. Passes are
-    * O(log n): every pass removes at least the larger-hash endpoint
-    * of every edge and shrinks components by an expected constant
-    * factor regardless of their shape.
+  /** Connected components by ITERATED hash-to-min contraction with a
+    * SMALL-GRAPH FINISH: each pass maps every node to its
+    * closed-neighborhood hash-min member and projects the edge set
+    * through the mapping. Before every pass, the first included, one
+    * bounded fetch (`limit(cap + 1)`, which is also the emptiness
+    * probe) reads the current edge set; once it holds at most `cap`
+    * edges, the components are finished on the driver
+    * ([[bfsLabels]]) and joined back. Passes are O(log n): every
+    * pass removes at least the larger-hash endpoint of every edge and
+    * shrinks components by an expected constant factor regardless of
+    * their shape, so the distributed loop only runs while the graph
+    * is too big for one place — the cutoff Kiveris et al. ("Connected
+    * Components in MapReduce and Beyond", SoCC 2014) end their rounds
+    * at. The cap is [[finishCapOf]], derived from configuration.
     *
     * Why not min-label propagation + pointer jumping (the r9 shape):
     * measured at the ×100 corpus (11.6M undirected edges, 1.49M
@@ -568,51 +582,136 @@ object EntityRes {
     *
     * Output contract: one row per labels0 node — (doc_id, label),
     * label = SMALLEST member id of the node's component (restored by
-    * the final re-min: pass reps are hash-chosen members, and the
-    * true min member need not be a representative). Requires
-    * identity labels0 (label = doc_id), which the call sites pass. */
+    * the final re-min after any pass: pass reps are hash-chosen
+    * members, and the true min member need not be a representative;
+    * a finish before any pass labels by min id directly). Requires
+    * identity labels0 (label = doc_id) holding every node an edge
+    * touches, and BIGINT ids, which the call sites pass. */
   private[operators] def ccContract(labels0: DataFrame,
-      bidir: DataFrame, maxRounds: Int = ErCcMaxRounds): DataFrame = {
+      bidir: DataFrame, maxRounds: Int = ErCcMaxRounds): DataFrame =
+    ccRun(labels0, bidir, maxRounds).labels
+
+  /** [[ccContract]]'s labels, plus `rawDepth` when the finish ran on
+    * the input graph itself (before any contraction pass): the
+    * largest BFS depth from a component's min member, which is
+    * exactly the number of synchronous min-label rounds the graph
+    * needs (q45's oracle guard). */
+  private[operators] final case class Cc(labels: DataFrame,
+      rawDepth: Option[Int])
+
+  /** [[ccContract]] itself; `finishCap` replaces the configured cap
+    * (specs: `Some(0)` sends every component through the distributed
+    * passes). */
+  private[operators] def ccRun(labels0: DataFrame, bidir: DataFrame,
+      maxRounds: Int = ErCcMaxRounds,
+      finishCap: Option[Long] = None): Cc = {
     val edges0 = bidir.repartition(col("u")).localCheckpoint(true)
-    if (edges0.isEmpty)
-      return labels0.select(col("doc_id"), col("label"))
-    // pass 1 — the ONLY edge/node-scale pass
-    val prov = hashMinPass(edges0)
-    var edges = contractEdges(edges0, prov)
-    // cumulative rep1 → current-rep map, quotient-scale throughout
-    var quot = prov.select(col("rep")).distinct()
-      .select(col("rep").as("q0"), col("rep").as("qrep"))
-      .localCheckpoint(true)
-    var passes = 1
-    while (!edges.isEmpty && passes < maxRounds) {
-      val p = hashMinPass(edges)
-      quot = quot.join(p.select(col("doc_id").as("j0"),
-          col("rep").as("j1")), quot("qrep") === col("j0"), "left")
-        .select(quot("q0"),
-          coalesce(col("j1"), quot("qrep")).as("qrep"))
-        .localCheckpoint(true)
-      edges = contractEdges(edges, p)
-      passes += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] pass=$passes" +
-          s" edges=${edges.count()} t=${System.nanoTime() / 1000000}")
+    val cap = finishCap.getOrElse(finishCapOf(edges0))
+    // None while the edge set is above the cap, the edges otherwise.
+    // One single-task job: coalesce(1) keeps the limit from scanning
+    // the partitions in rounds.
+    def fetch(edges: DataFrame): Option[Array[(Long, Long)]] = {
+      val got = edges.coalesce(1).limit((cap + 1).toInt).collect()
+      if (got.length > cap) None
+      else Some(got.map(r => (r.getLong(0), r.getLong(1))))
     }
-    require(edges.isEmpty,
-      s"CC contraction did not converge within $maxRounds passes — " +
-        "log-pass convergence should make this unreachable; investigate")
-    // node → pass-1 rep → final component rep; then restore the
-    // min-member-id output contract
-    val full = labels0
-      .join(prov.select(col("doc_id").as("d"), col("rep").as("r1")),
-        labels0("doc_id") === col("d"), "left")
-      .select(labels0("doc_id"),
-        coalesce(col("r1"), labels0("doc_id")).as("r1"))
-      .join(quot, col("r1") === col("q0"), "left")
-      .select(col("doc_id"),
-        coalesce(col("qrep"), col("r1")).as("comp"))
-    val mins = full.groupBy(col("comp"))
-      .agg(min(col("doc_id")).as("label"))
-    full.join(mins, "comp").select(col("doc_id"), col("label"))
+    val spark = labels0.sparkSession
+    import spark.implicits._
+    def finished(es: Array[(Long, Long)], id: String, label: String) = {
+      val (labels, depth) = bfsLabels(es)
+      (labels.toSeq.toDF(id, label), depth)
+    }
+    fetch(edges0) match {
+      case Some(es) =>
+        val (fin, depth) = finished(es, "f_id", "f_label")
+        Cc(labels0.join(broadcast(fin), labels0("doc_id") === col("f_id"),
+            "left")
+          .select(labels0("doc_id"),
+            coalesce(col("f_label"), labels0("doc_id")).as("label")),
+          Some(depth))
+      case None =>
+        // pass 1 — the ONLY edge/node-scale pass
+        val prov = hashMinPass(edges0)
+        var edges = contractEdges(edges0, prov)
+        // cumulative rep1 → current-rep map, quotient-scale throughout
+        var quot = prov.select(col("rep")).distinct()
+          .select(col("rep").as("q0"), col("rep").as("qrep"))
+          .localCheckpoint(true)
+        def compose(p: DataFrame): DataFrame =
+          quot.join(p.select(col("doc_id").as("j0"), col("rep").as("j1")),
+              quot("qrep") === col("j0"), "left")
+            .select(quot("q0"),
+              coalesce(col("j1"), quot("qrep")).as("qrep"))
+        var passes = 1
+        var small = fetch(edges)
+        while (small.isEmpty && passes < maxRounds) {
+          val p = hashMinPass(edges)
+          quot = compose(p).localCheckpoint(true)
+          edges = contractEdges(edges, p)
+          passes += 1
+          small = fetch(edges)
+        }
+        require(small.isDefined,
+          s"CC contraction did not converge within $maxRounds passes — " +
+            "log-pass convergence should make this unreachable; investigate")
+        // the finish labels each quotient component by its smallest rep
+        quot = compose(finished(small.get, "doc_id", "rep")._1)
+        // node → pass-1 rep → final component rep; then restore the
+        // min-member-id output contract
+        val full = labels0
+          .join(prov.select(col("doc_id").as("d"), col("rep").as("r1")),
+            labels0("doc_id") === col("d"), "left")
+          .select(labels0("doc_id"),
+            coalesce(col("r1"), labels0("doc_id")).as("r1"))
+          .join(quot, col("r1") === col("q0"), "left")
+          .select(col("doc_id"),
+            coalesce(col("qrep"), col("r1")).as("comp"))
+        val mins = full.groupBy(col("comp"))
+          .agg(min(col("doc_id")).as("label"))
+        Cc(full.join(mins, "comp").select(col("doc_id"), col("label")),
+          None)
+    }
+  }
+
+  /** The edge count below which [[ccContract]] finishes on the
+    * driver: `spark.sql.autoBroadcastJoinThreshold`, the bound Spark
+    * already uses for "small enough to hold in one place", over the
+    * size Spark's statistics give one edge row without column stats
+    * (an 8-byte row header plus each column's default size). A
+    * threshold of −1 (broadcast off) turns the finish off: cap 0
+    * still finishes an empty edge set, which is convergence. */
+  private def finishCapOf(edges: DataFrame): Long = {
+    val threshold = edges.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0) 0L
+    else math.min(threshold / (8 + edges.schema.defaultSize),
+      Int.MaxValue - 1L)
+  }
+
+  /** Components of a small edge set on the driver: a BFS from each
+    * unvisited node in ascending id order, so a component's label is
+    * its smallest id. Edges are read in both directions. Returns
+    * (node → label, depth), depth = the largest BFS distance from a
+    * component's min member — the round at which synchronous
+    * min-label propagation stops changing labels. */
+  private[operators] def bfsLabels(edges: Array[(Long, Long)])
+      : (scala.collection.mutable.LongMap[Long], Int) = {
+    val adj = (edges ++ edges.map(_.swap)).groupMap(_._1)(_._2)
+    val label = scala.collection.mutable.LongMap.empty[Long]
+    var depth = 0
+    for (root <- adj.keys.toArray.sorted if !label.contains(root)) {
+      label(root) = root
+      var frontier = Array(root)
+      var d = 0
+      while (frontier.nonEmpty) {
+        depth = math.max(depth, d)
+        frontier = frontier.flatMap(adj).filter(y =>
+          !label.contains(y) && { label(y) = root; true })
+        d += 1
+      }
+    }
+    (label, depth)
   }
 
   /** q102: entity clustering — the OUTPUT of a record-linkage system:

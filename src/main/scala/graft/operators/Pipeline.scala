@@ -167,87 +167,44 @@ object Pipeline {
         count(lit(1)).over(Window.partitionBy(col("label"))))
       .orderBy(col("doc_id"))
 
-  /** Generic fixpoint connected components over an arbitrary edge set:
-    * iterate min-label propagation until no label changes, with an
-    * eager `localCheckpoint` per round — without it the plan/lineage
-    * doubles every round, which is what kills iterative Spark jobs at
-    * scale (q38's fixed `CcRounds` twin stays as the oracle-gated
-    * form).
-    *
-    * Convergence test: labels only ever decrease (propagate takes
-    * min(old, neighbors)), so "label sum unchanged ⟺ no label
-    * changed" — one tiny agg per round, no extra join. The sum runs in
-    * DECIMAL(38,0), not Long: a Long running sum over billions of
-    * 63-bit ids can wrap, and a wrap collision would declare false
-    * convergence; 38 exact digits hold ~1e19 rows of max-Long labels.
-    * An empty input (sum = NULL) converges immediately instead of
-    * NPE-ing.
-    *
-    * `labels0` must be (doc_id, label = doc_id); `bidir` must contain
-    * both edge directions. `oracleRoundBound`, when set, asserts the
-    * fixpoint was reached within that many propagation rounds — the
-    * guard that keeps a pinned fixed-round ORACLE (q45's
-    * [[CcOracleRounds]]) from silently falling behind a corpus whose
-    * graph diameter grew. */
-  private[operators] def fixpointLabels(labels0: DataFrame,
-      bidir: DataFrame, maxRounds: Int = 50,
-      oracleRoundBound: Option[Int] = None): DataFrame = {
-    val edges = bidir.localCheckpoint(true) // reused every round
-    var labels = labels0.localCheckpoint(true)
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val v = df.agg(sum(col("label").cast("decimal(38,0)"))).head.get(0)
-      if (v == null) java.math.BigDecimal.ZERO
-      else v.asInstanceOf[java.math.BigDecimal]
-    }
-    var sum0 = labelSum(labels)
-    var executed = 0
-    var fixRound = -1
-    var converged = false
-    while (!converged && executed < maxRounds) {
-      // [[FixpointProbeEvery]] chained propagations per materialization:
-      // each driver round-trip (checkpoint job + probe job) is fixed
-      // overhead, and on the convergence tail — where nothing changes —
-      // it dominates the actual data work. Chaining k rounds between
-      // barriers cuts that overhead ~k×; the k-deep plan stays safe
-      // because each layer's duplicated `labels` reference shares one
-      // exchange (ReuseExchange), and monotonicity keeps the probe
-      // exact: labels only decrease, so "sum unchanged across the k
-      // window ⟺ no label changed in any of its rounds" — equality
-      // between probes k apart proves fixpoint at the window's START.
-      // Overshot rounds past the fixpoint are no-ops on the result.
-      val k = math.min(FixpointProbeEvery, maxRounds - executed)
-      labels = (1 to k).foldLeft(labels)((l, _) => propagate(l, edges))
-        .localCheckpoint(true)
-      val sum1 = labelSum(labels)
-      executed += k
-      if (sum1.compareTo(sum0) == 0) { converged = true; fixRound = executed - k }
-      sum0 = sum1
-    }
-    // fixRound is the probe granularity's upper bound on the true
-    // fixpoint round (exact round rounded up to the probe cadence)
-    oracleRoundBound.foreach { bound =>
-      require(converged && fixRound <= bound,
-        s"CC fixpoint needed ${if (converged) fixRound else s">=$maxRounds"} " +
-          s"propagation rounds, above the pinned oracle bound $bound — " +
-          "raise CcOracleRounds to keep the oracle at fixpoint")
-    }
-    labels
-  }
-
-  /** q45: fixpoint connected components over the q38 near-dup graph —
-    * the production path (true components at any graph diameter; q38's
-    * fixed 3 rounds truncate chains longer than 3). The oracle runs the
-    * same propagation for [[CcOracleRounds]] rounds; the engine ASSERTS
-    * its fixpoint landed within that bound (`oracleRoundBound`), so a
-    * corpus whose near-dup graph diameter outgrows the pinned constant
-    * fails loudly instead of hash-mismatching mysteriously
-    * (PipelineSpec pins a synthetic long chain where fixed-round and
-    * fixpoint genuinely differ). */
+  /** q45: connected components over the q38 near-dup graph — the
+    * production path (true components at any graph diameter; q38's
+    * fixed 3 rounds truncate chains longer than 3) on the one CC
+    * engine, [[EntityRes.ccContract]]. The oracle runs q38's
+    * propagation for [[CcOracleRounds]] rounds, so the engine checks
+    * that bound ([[oracleRoundBound]]): a corpus whose near-dup graph
+    * diameter outgrows the pinned constant fails loudly instead of
+    * hash-mismatching mysteriously (PipelineSpec pins a synthetic long
+    * chain where fixed-round and converged labels genuinely differ). */
   def q45CcFixpoint(s: SparkSession, dir: String): DataFrame = {
     val (base, bidir) = docGraph(s, dir)
     val labels0 = base.select(col("doc_id"), col("doc_id").as("label"))
-    withMembers(fixpointLabels(labels0, bidir,
-      oracleRoundBound = Some(CcOracleRounds)))
+    withMembers(oracleRoundBound(labels0, bidir,
+      EntityRes.ccRun(labels0, bidir), CcOracleRounds))
+  }
+
+  /** The CC labels, once `bound` synchronous min-label rounds provably
+    * reach them (throws otherwise). When the small-graph finish ran on
+    * the input graph, its BFS depth is that round count exactly;
+    * otherwise `bound` chained [[propagate]] rounds run as one plan
+    * and must leave no label different from the components (one
+    * action). */
+  private[operators] def oracleRoundBound(labels0: DataFrame,
+      bidir: DataFrame, cc: EntityRes.Cc, bound: Int): DataFrame = {
+    val fail = "raise CcOracleRounds to keep the oracle at fixpoint"
+    cc.rawDepth match {
+      case Some(depth) =>
+        require(depth <= bound, s"CC needs $depth synchronous " +
+          s"min-label rounds, above the pinned oracle bound $bound — $fail")
+      case None =>
+        val pinned = (1 to bound).foldLeft(labels0)((l, _) => propagate(l, bidir))
+        val off = pinned.join(cc.labels.withColumnRenamed("label", "cc"),
+            "doc_id")
+          .filter(col("label") =!= col("cc")).count()
+        require(off == 0, s"$off labels still differ from the " +
+          s"components after the pinned oracle's $bound min-label rounds — $fail")
+    }
+    cc.labels
   }
 
   val ChunkSize = 50
@@ -469,16 +426,20 @@ object Pipeline {
 
   val q38CcLabelsOracle: String = ccOracleSql(CcRounds)
 
-  /** Rounds chained between driver convergence probes in the iterative
-    * fixpoints (q45 CC, q65 PageRank). Each probe is a materializing
-    * barrier plus an O(1)-row driver action — fixed overhead that
-    * dominates the convergence tail — and monotonicity makes the
-    * coarser probe exact: an unchanged total across a k-round window
-    * proves fixpoint at the window's start, and overshot rounds are
-    * no-ops. The reported fixpoint round is rounded UP to the cadence,
-    * so pinned oracle bounds need (k-1) rounds of slack. */
+  /** Rounds chained between driver convergence probes in q65's
+    * PageRank fixpoint. Each probe is a materializing barrier plus an
+    * O(1)-row driver action — fixed overhead that dominates the
+    * convergence tail — and monotonicity makes the coarser probe
+    * exact: an unchanged total across a k-round window proves
+    * fixpoint at the window's start, and overshot rounds are no-ops.
+    * The reported fixpoint round is rounded UP to the cadence, so
+    * pinned oracle bounds need (k-1) rounds of slack. */
   val FixpointProbeEvery = 3
 
+  /** Min-label rounds q45's oracle unrolls; [[oracleRoundBound]]
+    * requires the corpus graph to converge within them (exactly: the
+    * BFS depth from each component's min member, or a mismatch count
+    * after this many propagated rounds). */
   val CcOracleRounds = 6
 
   val q45CcFixpointOracle: String = ccOracleSql(CcOracleRounds)

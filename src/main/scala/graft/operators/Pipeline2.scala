@@ -293,10 +293,10 @@ object Pipeline2 {
     * truncating division, so both engines agree bit-for-bit). Star
     * edges (group-min ↔ member) keep the edge set O(group); each
     * round is one edge-keyed join + one vertex-keyed agg — the
-    * hash-partitioned weighted-propagation shape (q38/q45's CC loop
+    * hash-partitioned weighted-propagation shape (q38's CC rounds
     * with per-edge arithmetic), no driver state. Fixed rounds keep it
-    * oracle-checkable; a production run iterates with per-round
-    * checkpoints like q45. */
+    * oracle-checkable; a production run iterates to fixpoint with
+    * per-probe checkpoints, as q65 does. */
   def q61Pagerank(s: SparkSession, dir: String): DataFrame = {
     val (ids, edges) = prGraph(s, dir) // shared with q65 — one construction
     var r = ids.withColumn("r", lit(1000L))
@@ -400,17 +400,16 @@ object Pipeline2 {
     * in r and F(r₀) ≥ r₀, so by induction r_{k+1} ≥ r_k pointwise,
     * bounded above by total mass ⇒ an exact integer fixpoint in
     * finitely many rounds, after which extra rounds are no-ops. That
-    * makes "Σr unchanged ⟺ no component changed" (all deltas ≥ 0) the
-    * same one-scalar-per-round convergence probe as
-    * [[Pipeline.fixpointLabels]], and lets a pinned-round oracle
-    * overshoot harmlessly. The Σ runs in DECIMAL(38,0) (wrap-immune);
+    * makes "Σr unchanged ⟺ no component changed" (all deltas ≥ 0) an
+    * exact one-scalar-per-round convergence probe, and lets a
+    * pinned-round oracle overshoot harmlessly. The Σ runs in DECIMAL(38,0) (wrap-immune);
     * per-node ranks stay BIGINT — bounded by total mass ≈ 1000·N,
     * exact to ~10¹⁵ docs. The dangling sum rides the dataflow as a
     * broadcast 1-row frame (dangling is a static per-doc flag), so the
     * driver only probes every [[Pipeline.FixpointProbeEvery]] rounds:
     * each probe group costs k edge joins + k vertex aggs + ONE eager
-    * localCheckpoint + ONE O(1)-row driver read — the q45 iterative
-    * shape with k× less per-round fixed overhead.
+    * localCheckpoint + ONE O(1)-row driver read — k× less per-round
+    * fixed overhead than probing every round.
     *
     * `oracleRoundBound` asserts the fixpoint was reached within the
     * pinned oracle's round budget ([[PrOracleRounds]]), failing loudly

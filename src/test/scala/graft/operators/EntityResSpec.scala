@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.tools.JobCount
 
 /** Entity-resolution semantics on planted fixtures (the synthetic
   * corpus has no true duplicate entities, so the real behavior —
@@ -134,6 +136,108 @@ class EntityResSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.length === 300)
     assert(out.forall(_._2 == 0L), "every node labeled by the path min")
+  }
+
+  private def bidirOf(pairs: Seq[(Long, Long)]): DataFrame = {
+    import s.implicits._
+    val e = pairs.toDF("u", "v")
+    e.unionByName(e.select($"v".as("u"), $"u".as("v")))
+  }
+
+  private def labelMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Smallest member id per node by union-find — the reference the
+    * engine's paths are checked against. */
+  private def minLabels(nodes: Seq[Long],
+      pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: Long): Long =
+      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    pairs.foreach { case (u, v) =>
+      val (a, b) = (find(u), find(v))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
+  test("ccContract's driver finish labels exactly as forced-distributed " +
+      "passes: a 300-node path, a seeded multi-component graph with " +
+      "duplicate edges, an empty edge set") {
+    import s.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    // 8 disjoint id ranges, sparse random edges inside each (several
+    // components per range), every edge repeated in one or both
+    // directions some of the time
+    val random = (0 until 8).flatMap { c =>
+      val lo = c * 100L
+      Seq.fill(60)((lo + rnd.nextInt(100), lo + rnd.nextInt(100)))
+        .filter { case (u, v) => u != v }
+    }
+    val withDups = random ++ random.take(40) ++ random.take(25).map(_.swap)
+    val cases = Seq(
+      "path" -> (0L until 299L).map(i => (i, i + 1)),
+      "random" -> withDups,
+      "empty" -> Seq.empty[(Long, Long)])
+    for ((name, pairs) <- cases) {
+      // labels0 also holds nodes no edge touches (they stay singletons)
+      val nodes = (pairs.flatMap(e => Seq(e._1, e._2)) ++
+        Seq(5000L, 5001L)).distinct
+      val labels0 = nodes.toDF("doc_id").withColumn("label", $"doc_id")
+      val bidir = bidirOf(pairs)
+      val nRows = 2L * pairs.size
+      val finish = EntityRes.ccRun(labels0, bidir)
+      val distributed = EntityRes.ccRun(labels0, bidir, finishCap = Some(0L))
+      // above the cap at the first fetch, finished after ≥ 1 pass
+      val late = EntityRes.ccRun(labels0, bidir,
+        finishCap = Some(math.max(nRows - 1, 0L)))
+      val want = minLabels(nodes, pairs)
+      assert(finish.rawDepth.isDefined, s"$name: finish must run unpassed")
+      if (pairs.nonEmpty) {
+        assert(distributed.rawDepth.isEmpty && late.rawDepth.isEmpty, name)
+      }
+      for ((path, cc) <- Seq("finish" -> finish,
+          "distributed" -> distributed, "late finish" -> late)) {
+        assert(labelMap(cc.labels) === want, s"$name via $path")
+      }
+    }
+  }
+
+  test("ccContract's finish depth is the synchronous-round count, and " +
+      "a broadcast threshold of -1 turns the finish off") {
+    // path 0..9 labeled from its min end: 9 rounds; a star: 1 round
+    val path = (0L until 9L).map(i => (i, i + 1))
+    val star = (11L to 15L).map(i => (10L, i))
+    val labels0 = {
+      import s.implicits._
+      (0L to 15L).toDF("doc_id").withColumn("label", $"doc_id")
+    }
+    assert(EntityRes.ccRun(labels0, bidirOf(path ++ star)).rawDepth
+      === Some(9))
+    assert(EntityRes.ccRun(labels0, bidirOf(star)).rawDepth === Some(1))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = s.conf.get(key)
+    s.conf.set(key, "-1")
+    try {
+      val off = EntityRes.ccRun(labels0, bidirOf(path ++ star))
+      assert(off.rawDepth.isEmpty, "threshold -1 must force the passes")
+      assert(labelMap(off.labels) ===
+        minLabels(0L to 15L, path ++ star))
+    } finally s.conf.set(key, before)
+  }
+
+  test("q176 sorts its block-grain result in one partition: the rows " +
+      "of the global sort, in its order, with one Spark job fewer " +
+      "(the pair stage no longer re-runs to sample range bounds)") {
+    import s.implicits._
+    // q176 plants its own probe blocks; one real customer suffices
+    val pieces = EntityRes.q176Pieces(s,
+      customersDir(Seq((1L, "Acme Corp", 1, 0.0))))
+    val (rows, jobs) = JobCount(s)(pieces("full").collect().toSeq)
+    val (globalRows, globalJobs) = JobCount(s)(pieces("unordered")
+      .orderBy($"nation", $"bal_bucket").collect().toSeq)
+    assert(rows.nonEmpty && rows === globalRows)
+    assert(jobs === globalJobs - 1)
   }
 
   test("q101 plans block-local pair expansion only: no cartesian, " +
