@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
@@ -59,17 +59,36 @@ object Bench {
       .asScala.map(_.getCollectionTime.max(0L)).sum
   }
 
+  /** Session warm-up before the first timed run: session init,
+    * parquet footer reads, codegen paths. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    SparkEntry.queries("q1_agg")(spark, sfDir).write
+      .format("noop").mode("overwrite").save()
+
+  /** One timed run of `fn`, materialized through the `noop` sink.
+    * A failure is handed to `onFailure` inside the timed region (Bench
+    * logs it and goes on; TimeQ rethrows). The blocks the run left
+    * behind are released OUTSIDE the timed region, so the next
+    * measurement starts from clean storage memory (see
+    * [[Sessions.releaseBlocks]] — order-dependent timings otherwise). */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame)(
+      onFailure: Throwable => Unit): Double = {
+    val t0 = System.nanoTime()
+    // operator coverage caps (ngram/q101/q107 block caps) surface as
+    // observed metrics via Sessions.printObservedMetrics — the listener
+    // reads the EXECUTED QueryExecution (reading df.queryExecution
+    // here reported the never-run clone's [0,0])
+    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable => onFailure(e) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    Sessions.releaseBlocks(spark)
+    sec
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.localDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // The driver parses the LAST ~2000 chars of combined sbt output for
     // the one JSON line. `releaseBlocks` unpersists localCheckpointed
     // barriers between queries BY DESIGN (see its scaladoc), and each
@@ -85,47 +104,25 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     Sessions.printObservedMetrics(spark)
+    warmUp(spark, sfDir)
 
-    // warm-up: session init, parquet footer reads, codegen paths
-    SparkEntry.queries("q1_agg")(spark, sfDir).write
-      .format("noop").mode("overwrite").save()
+    def runOnce(name: String, fn: (SparkSession, String) => DataFrame): Double =
+      timeOnce(spark, sfDir, fn)(e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"))
 
-    def runOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-        printMetrics: Boolean): Double = {
-      val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        // operator coverage caps (ngram/q101/q107 block caps) surface
-        // as observed metrics via Sessions.printObservedMetrics — the
-        // listener reads the EXECUTED QueryExecution (reading
-        // df.queryExecution here reported the never-run clone's [0,0])
-        df.write.format("noop").mode("overwrite").save()
+    /** (name, cold s, warm s, GC s during the warm run) per entry. */
+    def coldWarm(entries: Map[String, (SparkSession, String) => DataFrame]) =
+      entries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val cold = runOnce(name, fn)
+        val gc0 = gcMillis()
+        val warm = runOnce(name, fn)
+        (name, cold, warm, (gcMillis() - gc0) / 1e3)
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // inter-query isolation: drop this run's barrier blocks so the
-      // next measurement starts from clean storage memory (see
-      // Sessions.releaseBlocks — order-dependent timings otherwise)
-      Sessions.releaseBlocks(spark)
-      sec
-    }
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val cold = runOnce(name, fn, printMetrics = true)
-      val gc0 = gcMillis()
-      val warm = runOnce(name, fn, printMetrics = false)
-      (name, cold, warm, (gcMillis() - gc0) / 1e3)
-    }
+    val results = coldWarm(SparkEntry.queries)
     // benchExtras: measured + reported, but NOT correctness entries —
     // e.g. the deliberately-unsalted q49 twin the salted plan must beat
-    val extras = SparkEntry.benchExtras.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val cold = runOnce(name, fn, printMetrics = true)
-      val gc0 = gcMillis()
-      val warm = runOnce(name, fn, printMetrics = false)
-      (name, cold, warm, (gcMillis() - gc0) / 1e3)
-    }
+    val extras = coldWarm(SparkEntry.benchExtras)
     val all = results ++ extras
     val total = results.map(_._3).sum
     val full =

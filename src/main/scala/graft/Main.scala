@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.Registry
 import graft.crud.CrudEngine
 import graft.rest.Server
@@ -125,14 +123,7 @@ object Main {
       System.err.println(s"invalid port $port"); sys.exit(2)
     }
 
-    val spark = Sessions.localDefaults(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     // --storages <file>: reference-format storage config
     // ({"json": {"storage_file": path}}); --storage overrides directly

@@ -34,25 +34,26 @@ object Sessions {
   def localDefaults(b: SparkSession.Builder): SparkSession.Builder =
     defaults(b).config("spark.network.timeout", "600s")
 
-  /** Drop every block any query left behind (localCheckpoint barriers
-    * persist MEMORY_AND_DISK blocks that only a GC cycle reclaims):
-    * Bench/TimeQ call this BETWEEN queries so each measurement starts
-    * from clean storage memory — without it, timings are
-    * order-dependent (a barrier-heavy query's blocks squeeze the next
-    * query's execution memory; measured 6× inflation at sf10) and the
-    * suite eventually GC-stalls. Semantically each bench entry is an
-    * independent job — on a cluster it would be its own application.
-    *
-    * The explicit `System.gc()` is what actually reclaims broadcast
-    * blocks and shuffle files: Spark's ContextCleaner is weak-reference
-    * driven — it removes a broadcast/shuffle only after the driver GCs
-    * the owning object. On a large, mostly-idle driver heap a full GC
-    * may never happen during a whole bench suite, so ~170 executions'
-    * broadcasts and shuffles accumulate in unified memory and squeeze
-    * execution memory (measured: dedup_minhash_lsh 20s isolated vs 50s
-    * late in the sf10 suite, with warm > cold inversions from spill).
-    * Callers invoke this OUTSIDE the timed region, so the GC pause is
-    * suite wall-clock, not per-query time. */
+  /** Local parallelism of every entry point: `SPARK_GRAFT_CPUS` when
+    * set, else the machine's cores. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The one session builder: [[localDefaults]] on `local[cpus]` with
+    * one shuffle partition per core and no UI. Returns the running
+    * session if one exists (`getOrCreate`), so the shared test session
+    * and a main's session come from the same place. */
+  def local(cpus: Int = Sessions.cpus): SparkSession = {
+    val s = localDefaults(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Print every query's observed metrics (operator coverage caps —
     * the ngram/q101/q107 block-cap declarations) from the
     * QueryExecution that actually RAN. Reading
@@ -102,6 +103,25 @@ object Sessions {
       Thread.sleep(20)
   }
 
+  /** Drop every block any query left behind (localCheckpoint barriers
+    * persist MEMORY_AND_DISK blocks that only a GC cycle reclaims):
+    * Bench/TimeQ call this BETWEEN queries so each measurement starts
+    * from clean storage memory — without it, timings are
+    * order-dependent (a barrier-heavy query's blocks squeeze the next
+    * query's execution memory; measured 6× inflation at sf10) and the
+    * suite eventually GC-stalls. Semantically each bench entry is an
+    * independent job — on a cluster it would be its own application.
+    *
+    * The explicit `System.gc()` is what actually reclaims broadcast
+    * blocks and shuffle files: Spark's ContextCleaner is weak-reference
+    * driven — it removes a broadcast/shuffle only after the driver GCs
+    * the owning object. On a large, mostly-idle driver heap a full GC
+    * may never happen during a whole bench suite, so ~170 executions'
+    * broadcasts and shuffles accumulate in unified memory and squeeze
+    * execution memory (measured: dedup_minhash_lsh 20s isolated vs 50s
+    * late in the sf10 suite, with warm > cold inversions from spill).
+    * Callers invoke this OUTSIDE the timed region, so the GC pause is
+    * suite wall-clock, not per-query time. */
   def releaseBlocks(spark: SparkSession): Unit = {
     awaitQuiescent(spark)
     spark.sharedState.cacheManager.clearCache()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * codegen'd kernels the DataFrame API uses:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * builder.withExtensions(new GraftExtensions)  // a SparkSession.Builder
   * // or: --conf spark.sql.extensions=graft.functions.GraftExtensions
   * spark.sql("SELECT long_array_dot(a, b), simhash16(toks) FROM t")
   * }}}

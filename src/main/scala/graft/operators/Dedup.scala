@@ -1110,9 +1110,9 @@ object Dedup {
     // so it is the shuffled-hash BUILD side: without the hint both
     // size joins sort-merge, and sorting the Σ df² pair stream twice
     // was the full query's largest allocation — the round-13 sf10
-    // heap margin (ProfileQ107 ×100: 2 × 9.1 GB of spilled sort
-    // data; the hint removes both sorts — the pair stream streams
-    // through two hash probes instead).
+    // heap margin (tools/ProfileQ107 as of ae1d6d4, ×100: 2 × 9.1 GB
+    // of spilled sort data; the hint removes both sorts — the pair
+    // stream streams through two hash probes instead).
     pairs
       .join(sizes.select(col("doc_id").as("da"), col("nsz").as("na"))
         .hint("shuffle_hash"), "da")

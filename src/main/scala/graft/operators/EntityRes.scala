@@ -325,8 +325,8 @@ object EntityRes {
   def q176ErRecall(s: SparkSession, dir: String): DataFrame =
     q176Pieces(s, dir)("full")
 
-  /** q176 internals, exposed piecewise for the optimization loop's
-    * bisection (tools/Scratch); "full" is the declared query. */
+  /** q176 as the declared query ("full") and as its result before the
+    * one-partition sort ("unordered"). */
   private[graft] def q176Pieces(s: SparkSession, dir: String)
       : Map[String, DataFrame] = {
     val real = Tables.load(s, dir, "customer")
@@ -431,8 +431,7 @@ object EntityRes {
     // at sf0.01
     val full = unordered.repartition(1)
       .sortWithinPartitions(col("nation"), col("bal_bucket"))
-    Map("bnT" -> bnT, "elig" -> elig, "pairs" -> pairs,
-      "unordered" -> unordered, "full" -> full)
+    Map("unordered" -> unordered, "full" -> full)
   }
 
   val q176ErRecallOracle: String = {

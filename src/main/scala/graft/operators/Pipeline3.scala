@@ -645,10 +645,10 @@ object Pipeline3 {
     // second (sequential) barrier: grams feeds BOTH the df aggregate
     // and the occurrence semi-join — without it the tokenShingleMd5
     // kernel + explode run twice from the survivor blocks (measured
-    // 41.2 → 20.3 s at ×100, ProfileQ84). Unlike q153's parallel
-    // corpus checkpoints (which evicted each other's blocks), this one
-    // derives FROM the survivor barrier after it materializes, so the
-    // two never compete for the same read.
+    // 41.2 → 20.3 s at ×100, tools/ProfileQ84 as of ae1d6d4). Unlike
+    // q153's parallel corpus checkpoints (which evicted each other's
+    // blocks), this one derives FROM the survivor barrier after it
+    // materializes, so the two never compete for the same read.
     val grams = survivors.select(col("doc_id"),
         col("n_tokens").as("n"),
         graft.functions.TextFunctions.tokenShingleMd5(col("toks"), k)

@@ -243,13 +243,14 @@ object Relational2 {
     * a 100 TB pipeline needs for reproducible subsets. 26/256 hash
     * prefixes ≈ 10.16%.
     *
-    * Cost profile (sf0.1, local[32], graft.tools.ProfileQ35): plain
-    * scan 0.4s; + md5 filter 1.0s; full query 0.7s warm / 2.0s cold
-    * (first run pays whole-stage-codegen compile). The 5.6s seen in
-    * BENCH_r02 was concurrent machine load, not the plan — the same
-    * suite re-run measures 0.73s. md5 is the portable cross-engine
-    * sampler; Spark-only pipelines can halve the cost with xxhash64
-    * (0.34s measured) at the price of a DuckDB-checkable oracle. */
+    * Cost profile (sf0.1, local[32], graft.tools.ProfileQ35 as of
+    * ae1d6d4): plain scan 0.4s; + md5 filter 1.0s; full query 0.7s
+    * warm / 2.0s cold (first run pays whole-stage-codegen compile).
+    * The 5.6s seen in BENCH_r02 was concurrent machine load, not the
+    * plan — the same suite re-run measures 0.73s. md5 is the portable
+    * cross-engine sampler; Spark-only pipelines can halve the cost
+    * with xxhash64 (0.34s measured) at the price of a DuckDB-checkable
+    * oracle. */
   def q35SampleHash(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .filter(substring(

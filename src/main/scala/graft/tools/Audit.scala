@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Plan-property auditor: extracts the SURVEY §8.5 table from the
@@ -17,11 +15,7 @@ object Audit {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.Sessions.localDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     var bad = List.empty[String]
     println("| query | pushdown | BHJ | SMJ | BNLJ | WGL | topK | expand | cartesian | globalWin |")

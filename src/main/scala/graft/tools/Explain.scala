@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Plan auditor: prints `explain(formatted)` for selected queries so we
@@ -10,11 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = graft.Sessions.localDefaults(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val wanted =
       if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -41,13 +40,7 @@ object PointOpBench {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "POINTOPS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.localDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
 
     val model = Registry.parseDefinition(
       """{"model_name":"order","storage_type":"json",
@@ -105,8 +98,9 @@ object PointOpBench {
     md ++= s"""Generated by `runMain graft.tools.PointOpBench` (orders table
       |bulk-loaded into a fresh `ParquetBackend`; bulk_load in seconds,
       |per-op latency in milliseconds as the median of 5 point ops on
-      |sampled existing pks, warm session, local[$cpus]; `jobs` is the
-      |mean number of Spark jobs one op launched). Claim under test
+      |sampled existing pks, warm session,
+      |local[${graft.Sessions.cpus}]; `jobs` is the mean number of Spark
+      |jobs one op launched). Claim under test
       |(SURVEY §1.4): point ops touch ONE pk-hash bucket —
       |O(|table|/buckets) — while the reference rewrites its entire
       |store file per request (`json_storage.rs`).

@@ -1,42 +1,115 @@
 package graft.tools
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{Bench, Sessions, SparkEntry}
 
 /** Targeted timing for named queries (cold + warm runs through the
-  * noop sink) — the full `graft.Bench` suite takes minutes; this is
-  * the fast feedback loop while iterating on one operator.
+  * noop sink, Bench's timing loop) — the full `graft.Bench` suite
+  * takes minutes; this is the fast feedback loop while iterating on
+  * one operator. Each query also gets its warm run's per-stage
+  * attribution (the Stages-tab reading, headless): the top stages by
+  * summed task runtime with shuffle/spill bytes and the stage's plan
+  * scopes, so a regression can be pinned to an operator without the
+  * UI. Name a query several times to repeat it.
   * Usage: `runMain graft.tools.TimeQ q1_agg ta_langid ...`
   * (SPARK_GRAFT_SF_DIR selects the corpus, default sf0.1). */
 object TimeQ {
+
+  /** One stage of a warm run: wall = completion − submission. */
+  final case class Stage(id: Int, name: String, wallMs: Long,
+      taskSumMs: Long, taskMaxMs: Long, tasks: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long)
+
+  /** A query's cold and warm seconds and its warm run's stages, by
+    * descending summed task runtime. */
+  final case class Timing(name: String, cold: Double, warm: Double,
+      stages: Seq[Stage])
+
+  /** Per-stage task sums and stage names, cleared before each warm
+    * run. */
+  private final class StageListener extends SparkListener {
+    private val sums = new ConcurrentHashMap[Int, Stage]()
+    private val names = new ConcurrentHashMap[Int, (String, Long)]()
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      val info = s.stageInfo
+      val wall = (for {
+        a <- info.completionTime
+        b <- info.submissionTime
+      } yield a - b).getOrElse(0L)
+      val scopes = info.rddInfos.sortBy(_.id)
+        .map(r => r.scope.map(_.name).getOrElse(r.name))
+        .distinct.mkString(">").take(110)
+      names.put(info.stageId, (scopes, wall))
+    }
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      val m = t.taskMetrics
+      if (m != null) sums.merge(t.stageId,
+        Stage(t.stageId, "?", 0L, m.executorRunTime, m.executorRunTime, 1L,
+          m.shuffleReadMetrics.totalBytesRead,
+          m.shuffleWriteMetrics.bytesWritten, m.diskBytesSpilled),
+        (a, b) => a.copy(taskSumMs = a.taskSumMs + b.taskSumMs,
+          taskMaxMs = math.max(a.taskMaxMs, b.taskMaxMs),
+          tasks = a.tasks + b.tasks,
+          shuffleReadBytes = a.shuffleReadBytes + b.shuffleReadBytes,
+          shuffleWriteBytes = a.shuffleWriteBytes + b.shuffleWriteBytes,
+          spillBytes = a.spillBytes + b.spillBytes))
+    }
+
+    def clear(): Unit = { sums.clear(); names.clear() }
+
+    def stages: Seq[Stage] = sums.values.asScala.toSeq.map { st =>
+      val (nm, wall) = names.getOrDefault(st.id, ("?", 0L))
+      st.copy(name = nm, wallMs = wall)
+    }.sortBy(-_.taskSumMs)
+  }
+
+  /** Warm up, then time each named query (SparkEntry.queries or a
+    * bench extra) cold and warm, printing its `[timeq]` line and its
+    * warm run's top-12 `[stagetime]` stages as it finishes. A failed
+    * query fails the run. The session stays open. */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String])
+      : Seq[Timing] = {
+    val all = SparkEntry.queries ++ SparkEntry.benchExtras
+    val listener = new StageListener
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Bench.warmUp(spark, sfDir)
+      names.map { name =>
+        val fn = all(name)
+        def once(): Double = Bench.timeOnce(spark, sfDir, fn)(e => throw e)
+        val cold = once()
+        listener.clear()
+        val warm = once()
+        val stages = listener.stages
+        println(f"[timeq] $name%-24s cold=$cold%8.3f warm=$warm%8.3f")
+        println(f"[stagetime] $name stages=${stages.size}%d")
+        stages.take(12).foreach { st =>
+          println(f"[stagetime]   stage ${st.id}%5d " +
+            f"wall=${st.wallMs / 1e3}%7.2f " +
+            f"taskSum=${st.taskSumMs / 1e3}%8.2f " +
+            f"max=${st.taskMaxMs / 1e3}%6.2f n=${st.tasks}%4d " +
+            f"sRd=${st.shuffleReadBytes / 1e6}%8.1f MB " +
+            f"sWr=${st.shuffleWriteBytes / 1e6}%8.1f MB " +
+            f"spill=${st.spillBytes / 1e6}%7.1f MB ${st.name}")
+        }
+        Timing(name, cold, warm, stages)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Sessions.localDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val all = SparkEntry.queries ++ SparkEntry.benchExtras
-    // session warm-up so the first named query isn't charged for init
-    all("q1_agg")(spark, sfDir).write.format("noop").mode("overwrite").save()
-    args.foreach { name =>
-      val fn = all(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        graft.Sessions.releaseBlocks(spark) // see Bench: isolation
-        sec
-      }
-      val cold = once()
-      val warm = once()
-      println(f"[timeq] $name%-24s cold=$cold%8.3f warm=$warm%8.3f")
-    }
-    spark.stop()
+    val spark = Sessions.local()
+    try run(spark, sfDir, args.toSeq)
+    finally spark.stop()
   }
 }

@@ -5,14 +5,5 @@ import org.apache.spark.sql.SparkSession
 /** Shared local SparkSession for specs (one JVM-wide session — Spark
   * session startup is ~5s, so specs must not each build their own). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = Sessions.localDefaults(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 }
