@@ -13,11 +13,32 @@ import org.apache.spark.sql.SparkSession
   *   column to epoch nanos instead). Declared once here so operator
   *   functions stay free of session-conf side effects (a query must
   *   never mutate a shared SparkSession).
+  * - `codegen.cache.maxEntries` = 4096: the JVM-wide cache of
+  *   Janino-compiled classes holds the whole `SparkEntry.queries`
+  *   suite, so no query recompiles what an earlier query in the same
+  *   session compiled. Spark's default of 100 entries is below a
+  *   single query's count (q45, q119 and q176 compile 60, 53 and 67
+  *   classes), so a rotation of queries recompiled nearly all of its
+  *   classes on every round (176 of 179 for those three). A cold and
+  *   a warm run of each of the 197 queries at sf0.01, local[4], with
+  *   an unbounded cache compiled 2 897 classes (a second such round:
+  *   13; local mode compiles each class twice, for the driver's and
+  *   the executor's class loader, and the cache keys on both); 4096
+  *   is the next power of two. The size is a static conf,
+  *   read once per JVM when the first class compiles, and an entry
+  *   bound: the heap holds more classes, not an unbounded number.
+  * - `codegen.useIdInClassName` = false: with it on, AQE's run-
+  *   dependent whole-stage id is part of the generated source
+  *   (`GeneratedIteratorForCodegenStage<N>`), so code identical but
+  *   for that name missed the cache; q119 recompiled 4 such classes
+  *   on some runs whatever the cache size.
   */
 object Sessions {
   def defaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", 4096L)
+      .config("spark.sql.codegen.useIdInClassName", false)
 
   /** [[defaults]] plus local-single-JVM-only overrides. Every graft
     * entry point in this repo runs `local[*]` and uses this; a real
@@ -121,7 +142,12 @@ object Sessions {
     * execution memory (measured: dedup_minhash_lsh 20s isolated vs 50s
     * late in the sf10 suite, with warm > cold inversions from spill).
     * Callers invoke this OUTSIDE the timed region, so the GC pause is
-    * suite wall-clock, not per-query time. */
+    * suite wall-clock, not per-query time.
+    *
+    * Generated classes are NOT released: the JVM-wide codegen cache
+    * ([[defaults]]) keeps them between queries on purpose, so a later
+    * query reuses what an earlier one compiled instead of paying
+    * Janino again; its entry bound, not this call, bounds them. */
   def releaseBlocks(spark: SparkSession): Unit = {
     awaitQuiescent(spark)
     spark.sharedState.cacheManager.clearCache()

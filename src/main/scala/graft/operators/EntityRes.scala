@@ -387,6 +387,13 @@ object EntityRes {
       // the sort changes only element order, never the set size.
       .withColumn("g", sort_array(trigrams(col("nm"))))
       .withColumn("ng", size(col("g")).cast("long"))
+      // explicit-N exchange under BOTH join sides: AQE coalesced the
+      // window's small input to one partition, so the all-pairs
+      // kernel below ran as one task (sf0.01: n=1, taskSum 1.5 s);
+      // an explicit N is never coalesced. Both sides, because AQE
+      // picks the broadcast side at run time. Round-robin, not the
+      // block key: one planted block holds most of the pairs.
+      .repartition(s.sparkContext.defaultParallelism)
     // The truth predicate runs as a CONDITIONAL AGGREGATE, not a
     // pair-level Filter (round-14 profile): a filter above the join's
     // projection gets collapsed + pushed into the join condition,

@@ -98,6 +98,7 @@ final class ChangeLog(spark: SparkSession, dir: String,
       val key = (m.modelName.pluralCamel, pkJson)
       if (op == "delete") liveKeys.remove(key) else liveKeys.add(key)
       logRows.incrementAndGet()
+      written.incrementAndGet()
     } finally rw.readLock().unlock()
     // outside the read lock: compact() takes the WRITE half, and a
     // read→write upgrade would deadlock against ourselves
@@ -173,7 +174,7 @@ final class ChangeLog(spark: SparkSession, dir: String,
       Files.move(Paths.get(dir), old)
       Files.move(tmp, Paths.get(dir))
       deleteTree(old)
-      synchronized { cachedRows = Array.empty; cachedSeq = -1L }
+      synchronized { cachedRows = Array.empty; cachedWritten = -1L }
       // reseed the auto-compaction floor from the folded log's true
       // size (base keys + tombstones + tail) so the policy measures
       // growth SINCE this compaction, not against the old history
@@ -224,25 +225,30 @@ final class ChangeLog(spark: SparkSession, dir: String,
   // ---- poller snapshot cache ---------------------------------------
   // SSE subscribers poll every 500 ms; without a cache each poll of
   // each subscriber runs a full Spark collect() even when nothing
-  // changed — many idle subscribers become continuous Spark jobs. The
-  // in-memory `seq` counter already knows whether an append happened,
-  // so idle polls compare two longs and touch Spark not at all; at
-  // most ONE collect runs per sequence advance regardless of how many
-  // subscribers are connected.
+  // changed — many idle subscribers become continuous Spark jobs. An
+  // in-memory counter already knows whether an append happened, so
+  // idle polls compare two longs and touch Spark not at all; at most
+  // ONE collect runs per append regardless of how many subscribers
+  // are connected. The counter is `written`, bumped AFTER the append's
+  // parquet write, not `seq`, which advances BEFORE it: a poll between
+  // the two would snapshot the directory without the new event and
+  // mark it current, and the event would reach no subscriber until
+  // the next append (a live subscription timed out that way).
+  private val written = new java.util.concurrent.atomic.AtomicLong(0L)
   @volatile private var cachedRows: Array[Row] = Array.empty
-  @volatile private var cachedSeq: Long = -1L
+  @volatile private var cachedWritten: Long = -1L
 
   /** All events with seq > lastSeq, ascending — served from the cached
-    * snapshot, which is refreshed only when an append has advanced the
-    * sequence since the last collect. The initial refresh (cachedSeq
-    * = -1) also loads any events persisted by a previous process, so
+    * snapshot, which is refreshed only when an append has been written
+    * since the last collect. The initial refresh (cachedWritten = -1)
+    * also loads any events persisted by a previous process, so
     * catch-up-from-0 semantics are unchanged. */
   def eventsSince(lastSeq: Long): Array[Row] = {
-    val cur = seq.get()
-    if (cur > cachedSeq) synchronized {
-      if (cur > cachedSeq) {
+    val cur = written.get()
+    if (cur > cachedWritten) synchronized {
+      if (cur > cachedWritten) {
         cachedRows = all().orderBy(col("seq")).collect()
-        cachedSeq = cur
+        cachedWritten = cur
       }
     }
     cachedRows.filter(_.getAs[Long]("seq") > lastSeq)

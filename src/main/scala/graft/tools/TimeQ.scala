@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -17,6 +18,15 @@ import graft.{Bench, Sessions, SparkEntry}
   * summed task runtime with shuffle/spill bytes and the stage's plan
   * scopes, so a regression can be pinned to an operator without the
   * UI. Name a query several times to repeat it.
+  *
+  * The `[stagetime]` header also counts the classes Janino compiled
+  * during each run (`compiles=cold/warm`, Spark's JVM-wide
+  * `CodegenMetrics` counter). The warm run follows the SAME query, so
+  * its time hides the recompiles that happen between DIFFERENT
+  * queries when the generated-code cache is too small to hold them
+  * (with Spark's 100-entry default, TimeQ's warm q119 read 1.0 s
+  * while a q45/q119/q176 rotation read 1.8–2.0 s); the cold count,
+  * or the counts of a query named again later, show them.
   * Usage: `runMain graft.tools.TimeQ q1_agg ta_langid ...`
   * (SPARK_GRAFT_SF_DIR selects the corpus, default sf0.1). */
 object TimeQ {
@@ -84,13 +94,19 @@ object TimeQ {
       Bench.warmUp(spark, sfDir)
       names.map { name =>
         val fn = all(name)
-        def once(): Double = Bench.timeOnce(spark, sfDir, fn)(e => throw e)
-        val cold = once()
+        /** Seconds and classes compiled for one run. */
+        def once(): (Double, Long) = {
+          val c0 = compiles
+          val sec = Bench.timeOnce(spark, sfDir, fn)(e => throw e)
+          (sec, compiles - c0)
+        }
+        val (cold, coldCompiles) = once()
         listener.clear()
-        val warm = once()
+        val (warm, warmCompiles) = once()
         val stages = listener.stages
         println(f"[timeq] $name%-24s cold=$cold%8.3f warm=$warm%8.3f")
-        println(f"[stagetime] $name stages=${stages.size}%d")
+        println(f"[stagetime] $name stages=${stages.size}%d " +
+          s"compiles=$coldCompiles/$warmCompiles")
         stages.take(12).foreach { st =>
           println(f"[stagetime]   stage ${st.id}%5d " +
             f"wall=${st.wallMs / 1e3}%7.2f " +
@@ -104,6 +120,10 @@ object TimeQ {
       }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Classes Janino has compiled in this JVM so far. */
+  private def compiles: Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def main(args: Array[String]): Unit = {
     val sfDir =

@@ -21,6 +21,8 @@ class SessionsSpec extends AnyFunSuite {
     assert(sc.master === "local[4]")
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "4096")
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") === "false")
     assert(sc.getConf.get("spark.network.timeout") === "600s")
     assert(spark.conf.get("spark.sql.shuffle.partitions") ===
       sc.defaultParallelism.toString)

@@ -1,6 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
@@ -238,6 +243,37 @@ class EntityResSpec extends AnyFunSuite {
       .orderBy($"nation", $"bal_bucket").collect().toSeq)
     assert(rows.nonEmpty && rows === globalRows)
     assert(jobs === globalJobs - 1)
+  }
+
+  test("q176's all-pairs join reads one explicit round-robin exchange " +
+      "on both sides, so its kernel runs on every core") {
+    val full = EntityRes.q176Pieces(s,
+      customersDir(Seq((1L, "Acme Corp", 1, 0.0))))("full")
+    full.collect()
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }
+    def topJoin(p: SparkPlan): Option[BaseJoinExec] = p match {
+      case j: BaseJoinExec => Some(j)
+      case _ => kids(p).view.flatMap(topJoin).headOption
+    }
+    // the shuffles a join side reads directly (broadcasts are looked
+    // through: a broadcast side is built from what its stage read)
+    def nearestShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case e: ShuffleExchangeExec => Seq(e)
+      case _ => kids(p).flatMap(nearestShuffles)
+    }
+    val plan = full.queryExecution.executedPlan
+    val join = topJoin(plan).getOrElse(fail(s"no join in\n$plan"))
+    val n = s.sparkContext.defaultParallelism
+    join.children.foreach { side =>
+      val ex = nearestShuffles(side)
+      assert(ex.nonEmpty && ex.forall(_.outputPartitioning ===
+        RoundRobinPartitioning(n)), s"join side:\n$side")
+    }
   }
 
   test("q101 plans block-local pair expansion only: no cartesian, " +

@@ -1,10 +1,8 @@
 package graft.operators
 
-import java.io.{BufferedReader, InputStreamReader}
-
-import scala.collection.mutable.ArrayBuffer
-
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.tools.ForkedTimeQ
 
 /** Performance gate for the planted-skew join pair: the shipped plan
   * (`q49_skew_agg` — scale-conditioned, which at sf0.1's 5M fact
@@ -45,40 +43,15 @@ class SkewGateSpec extends AnyFunSuite {
     * on a coin-flip between statistically-close timings. */
   private val Tolerance = 1.3
 
-  // Spark 4.x on JDK 17 outside spark-submit needs the same module
-  // opens the sbt javaOptions inject (build.sbt jdk17AddOpens).
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   test("salted skew join beats the naive twin at bench parallelism") {
     val names = Seq("q49_skew_agg", "q49_skew_naive")
-    val cmd = Seq("java") ++ addOpens ++ Seq(
-      "-Xmx8g", "-Dspark.ui.enabled=false",
-      "-cp", "target/scala-2.13/classes:/opt/spark/jars/*",
-      "graft.tools.TimeQ") ++ Seq.fill(Reps)(names).flatten
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_GRAFT_CPUS", "32")
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
+    val (exit, out) = ForkedTimeQ.run(Seq.fill(Reps)(names).flatten,
+      cpus = 32, heap = "8g")
     val line = raw"\[timeq\] (\S+)\s+cold=\s*([0-9.]+) warm=\s*([0-9.]+)".r
-    val warms = Map(names.map(_ -> ArrayBuffer.empty[Double]): _*)
-    val reader = new BufferedReader(new InputStreamReader(proc.getInputStream))
-    try {
-      Iterator.continually(reader.readLine()).takeWhile(_ != null)
-        .foreach { l =>
-          line.findFirstMatchIn(l).foreach(m =>
-            warms(m.group(1)) += m.group(3).toDouble)
-        }
-    } finally reader.close()
-    assert(proc.waitFor() == 0, "forked TimeQ JVM failed")
-    assert(warms.values.forall(_.size == Reps),
+    val warms = out.flatMap(line.findFirstMatchIn(_))
+      .groupMap(_.group(1))(_.group(3).toDouble)
+    assert(exit == 0, "forked TimeQ JVM failed")
+    assert(names.forall(warms.getOrElse(_, Nil).size == Reps),
       s"expected $Reps timings per query, got " +
         warms.view.mapValues(_.size).toMap)
     val salted = warms("q49_skew_agg").min
