@@ -290,6 +290,8 @@ object EntityRes {
             (-3000002L, s"zz $ErRecallCore"),
             (-3000003L, s"g0 $ErRecallCore2"),
             (-3000007L, s"g1 $ErRecallCore2"))))
+      // ~1.1k planted rows: one partition, not a task per range slice
+      .coalesce(1)
 
   /** q176: recall cost of the q101 block cap — the q153/q131
     * calibration treatment applied to the ER pillar. q101's
@@ -408,10 +410,16 @@ object EntityRes {
     // post-agg — exactly the rows the old pair filter never formed.
     val isTruth = col("na") + col("nb") - col("ni") >= 1 &&
       expr("ni * 1000000 div (na + nb - ni)") >= ErTauE6
+    // bn and m are functions of the block key, so their equalities
+    // change no pair. They keep both sides' columns identical, which
+    // exchange reuse needs to serve both sides from ONE `elig` (one
+    // scan, one `bnT` observe, one rank window); a side that drops
+    // bn/m is a different subtree, and everything under it runs twice
     val pairs = elig.alias("a")
       .join(elig.alias("b"),
         col("a.nation") === col("b.nation") &&
           col("a.bal_bucket") === col("b.bal_bucket") &&
+          col("a.bn") === col("b.bn") && col("a.m") === col("b.m") &&
           col("b.rn") > col("a.rn"))
       .select(col("a.nation").as("nation"),
         col("a.bal_bucket").as("bal_bucket"), col("a.bn").as("bn"),
@@ -611,8 +619,7 @@ object EntityRes {
   private[operators] def ccRun(labels0: DataFrame, bidir: DataFrame,
       maxRounds: Int = ErCcMaxRounds,
       finishCap: Option[Long] = None): Cc = {
-    val edges0 = bidir.repartition(col("u")).localCheckpoint(true)
-    val cap = finishCap.getOrElse(finishCapOf(edges0))
+    val cap = finishCap.getOrElse(finishCapOf(bidir))
     // None while the edge set is above the cap, the edges otherwise.
     // One single-task job: coalesce(1) keeps the limit from scanning
     // the partitions in rounds.
@@ -627,7 +634,9 @@ object EntityRes {
       val (labels, depth) = bfsLabels(es)
       (labels.toSeq.toDF(id, label), depth)
     }
-    fetch(edges0) match {
+    // the first fetch reads `bidir` itself: a graph that finishes
+    // here never pays the passes' u-partitioned checkpoint
+    fetch(bidir) match {
       case Some(es) =>
         val (fin, depth) = finished(es, "f_id", "f_label")
         Cc(labels0.join(broadcast(fin), labels0("doc_id") === col("f_id"),
@@ -636,6 +645,7 @@ object EntityRes {
             coalesce(col("f_label"), labels0("doc_id")).as("label")),
           Some(depth))
       case None =>
+        val edges0 = bidir.repartition(col("u")).localCheckpoint(true)
         // pass 1 — the ONLY edge/node-scale pass
         val prov = hashMinPass(edges0)
         var edges = contractEdges(edges0, prov)

@@ -19,8 +19,8 @@ import graft.Tables
   * distribution — see [[quantileBuckets]]), aggregate one row per
   * bucket, compute EXCLUSIVE
   * per-bucket offsets inside one collected ≤[[PrefixBuckets]]-element
-  * array with the `aggregate` higher-order function (codegen'd
-  * Catalyst, no UDF, no join), then finish with a Window partitioned
+  * array with the `aggregate` higher-order function (Catalyst, no
+  * UDF, no join), then finish with a Window partitioned
   * BY BUCKET — every task sees one bucket's rows, the global order is
   * bucket-offset + in-bucket scan, and no executor ever holds more
   * than one bucket range. The result is exact for any bucket
@@ -31,11 +31,11 @@ object OrderStats {
 
   /** Range buckets for the distributed prefix scan — bounds per-task
     * state at |keys|/64 and the offset array at 64 entries. 64, not
-    * 256: the bucket map is a per-row linear scan over the boundary
-    * array and the boundaries an extra aggregation pass, both linear
-    * in the bucket count (measured at ×100: 256 boundaries doubled
-    * q119/q123), while 64 buckets already feed 2× the bench
-    * session's 32 cores. */
+    * 256: the boundaries are an extra aggregation pass linear in the
+    * bucket count (measured at ×100, when the bucket map was still a
+    * per-row linear scan: 256 boundaries doubled q119/q123), while
+    * 64 buckets already feed 2× the bench session's 32 cores. The
+    * bucket map itself is a binary search over the boundaries. */
   val PrefixBuckets = 64
 
   /** Assign each distinct-value row its range bucket for the prefix
@@ -51,8 +51,9 @@ object OrderStats {
     * equi-POPULATED under any distribution. The scan is exact for
     * ANY boundaries — estimation error in `approx_percentile` only
     * shifts work between buckets, never results. Bucket id =
-    * #boundaries strictly below the key: monotone in the key, so
-    * bucket-major + in-bucket order is the global order. */
+    * #boundaries strictly below the key ([[graft.functions.CountBelow]],
+    * a codegen'd binary search): monotone in the key, so bucket-major
+    * + in-bucket order is the global order. */
   private[operators] def quantileBuckets(perValue: DataFrame,
       key: String): DataFrame = {
     val qs = (1 until PrefixBuckets)
@@ -60,8 +61,8 @@ object OrderStats {
     val bnd = perValue.agg(
       expr(s"approx_percentile($key, array($qs), 1000)").as("bnd"))
     perValue.crossJoin(broadcast(bnd))
-      .withColumn("bucket", expr(
-        s"aggregate(bnd, 0, (acc, b) -> acc + IF($key > b, 1, 0))"))
+      .withColumn("bucket", graft.functions.TextStatFunctions
+        .countBelow(col(key), col("bnd")))
       .drop("bnd")
   }
 
@@ -119,24 +120,25 @@ object OrderStats {
       .agg(sum(when(col("grp") === 0, 1L).otherwise(0L)).as("c1"),
         sum(when(col("grp") === 1, 1L).otherwise(0L)).as("c2"))
       .localCheckpoint(false) // bounds + bucket totals + scan read it
-    val totals = perv.agg(sum(col("c1")).as("n1"),
-      sum(col("c2")).as("n2"))
     val bucketed = quantileBuckets(perv, "cents")
-      .crossJoin(broadcast(totals))
+    // the fold's final (a1, a2) are the half totals n1/n2: every
+    // offsets row carries them, so no separate totals aggregate runs
     val offsets = bucketed.groupBy(col("bucket"))
       .agg(sum(col("c1")).as("b1"), sum(col("c2")).as("b2"))
       .agg(sort_array(collect_list(
         struct(col("bucket"), col("b1"), col("b2")))).as("arr"))
-      .select(explode(expr(
+      .select(expr(
         """aggregate(arr,
           |  named_struct('a1', CAST(0 AS BIGINT), 'a2', CAST(0 AS BIGINT),
           |    'out', CAST(array() AS array<struct<bucket:int,o1:bigint,o2:bigint>>)),
           |  (s, x) -> named_struct('a1', s.a1 + x.b1, 'a2', s.a2 + x.b2,
           |    'out', array_append(s.out,
-          |      named_struct('bucket', x.bucket, 'o1', s.a1, 'o2', s.a2))),
-          |  s -> s.out)""".stripMargin)).as("o"))
+          |      named_struct('bucket', x.bucket, 'o1', s.a1, 'o2', s.a2))))"""
+          .stripMargin).as("f"))
+      .select(col("f.a1").as("n1"), col("f.a2").as("n2"),
+        explode(col("f.out")).as("o"))
       .select(col("o.bucket").as("bucket"), col("o.o1").as("o1"),
-        col("o.o2").as("o2"))
+        col("o.o2").as("o2"), col("n1"), col("n2"))
     val w = Window.partitionBy(col("bucket")).orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     bucketed.join(broadcast(offsets), "bucket")

@@ -3,7 +3,16 @@ package graft.functions
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.SparkSpec
 
 /** Property tests: every regex-free kernel must agree with the
   * declarative (regex / collection) reference implementation on
@@ -87,6 +96,90 @@ class KernelPropertySpec extends AnyFunSuite {
           xs.map(x => UTF8String.fromString(x): Any).toArray)
       assert(TextStatKernels.intersectCount(ad(a), ad(b)) ==
         a.toSet.intersect(b.toSet).size.toLong)
+    }
+  }
+
+  /** Short strings over ASCII, 2-, 3- and 4-byte UTF-8 characters
+    * (bytes ≥ 0x80, where a signed byte compare would misorder), of
+    * length 0–4 so that prefix pairs ("ab" vs "abc") are common. */
+  private val gramGen: Gen[String] = Gen.chooseNum(0, 4).flatMap(n =>
+    Gen.listOfN(n, Gen.oneOf("a", "b", "z", "\u0080", "é", "ß", "中",
+      "\uD83D\uDE00")).map(_.mkString))
+  /** Element-distinct arrays in binary (`sort_array`) order; one in
+    * five is empty. */
+  private val sortedGrams: Gen[Seq[UTF8String]] = Gen.frequency(
+    1 -> Gen.const(Nil),
+    4 -> Gen.listOf(gramGen).map(_.distinct.map(UTF8String.fromString)
+      .sortWith(_.compareTo(_) < 0)))
+
+  private def generic(xs: Seq[UTF8String]): ArrayData =
+    new GenericArrayData(xs.toArray[Any])
+  private val toUnsafe =
+    UnsafeProjection.create(Array[DataType](ArrayType(StringType, false)))
+  private def unsafe(xs: Seq[UTF8String]): UnsafeArrayData =
+    toUnsafe(InternalRow(generic(xs))).getArray(0).copy()
+
+  test("sortedIntersectCount's byte path ≡ its UTF8String path ≡ set " +
+      "intersection size, on multibyte, prefix and empty arrays") {
+    forAll(Gen.zip(sortedGrams, sortedGrams)) { case (a, b) =>
+      val want = a.toSet.intersect(b.toSet).size.toLong
+      val bytes = TextStatKernels.sortedIntersectCount(unsafe(a), unsafe(b))
+      val utf8 = TextStatKernels.sortedIntersectCount(generic(a), generic(b))
+      assert(bytes == want && utf8 == want, s"a=$a b=$b")
+      assert(TextStatKernels.sortedIntersectCount(unsafe(a), generic(b)) ==
+        want)
+    }
+    val prefix = Seq("ab", "abc").map(UTF8String.fromString)
+    assert(TextStatKernels.sortedIntersectCount(
+      unsafe(prefix), unsafe(prefix.drop(1))) == 1L)
+  }
+
+  test("count_below ≡ the aggregate lambda it replaces, codegen'd and " +
+      "interpreted: duplicate bounds, keys on a bound, negative keys, " +
+      "empty and null bounds, null keys") {
+    val s = SparkSpec.spark
+    val bounds: Gen[Seq[Long]] =
+      Gen.listOf(Gen.chooseNum(-5L, 5L)).map(_.take(9).sorted)
+    val row: Gen[Row] = for {
+      k <- Gen.frequency(1 -> Gen.const(null),
+        1 -> Gen.oneOf(Long.MinValue, Long.MaxValue),
+        12 -> Gen.chooseNum(-6L, 6L))
+      b <- Gen.frequency(1 -> Gen.const(null), 1 -> Gen.const(Nil),
+        10 -> bounds)
+    } yield Row(k, b)
+    val rows = Gen.listOfN(400, row)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20261019L))
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("bnd", ArrayType(LongType, containsNull = false))))
+    // built per mode: a Dataset keeps its physical plan once executed
+    def df = s.createDataFrame(s.sparkContext.parallelize(rows, 2), schema)
+      .select(col("k"), col("bnd"),
+        expr("aggregate(bnd, 0, (acc, b) -> acc + IF(k > b, 1, 0))")
+          .as("lambda"),
+        TextStatFunctions.countBelow(col("k"), col("bnd")).as("search"))
+    val modes = Seq(
+      true -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
+      false -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((codegen, confs) <- modes) {
+      val mode = if (codegen) "codegen" else "interpreted"
+      val before = confs.map { case (key, _) => key -> s.conf.getOption(key) }
+      confs.foreach { case (key, v) => s.conf.set(key, v) }
+      try {
+        val q = df
+        val got = q.collect()
+        assert(q.queryExecution.executedPlan
+          .exists(_.isInstanceOf[WholeStageCodegenExec]) == codegen, mode)
+        assert(got.length == rows.length)
+        got.foreach { r =>
+          assert(r.get(2) == r.get(3), s"$mode: $r")
+        }
+        assert(got.exists(r => r.isNullAt(1) && r.isNullAt(3)), mode)
+      } finally before.foreach {
+        case (key, Some(v)) => s.conf.set(key, v)
+        case (key, None) => s.conf.unset(key)
+      }
     }
   }
 }

@@ -2,13 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ExecutedPlans, SparkSpec}
 import graft.tools.JobCount
 
 /** Entity-resolution semantics on planted fixtures (the synthetic
@@ -245,27 +245,24 @@ class EntityResSpec extends AnyFunSuite {
     assert(jobs === globalJobs - 1)
   }
 
+  private def topJoin(p: SparkPlan): Option[BaseJoinExec] = p match {
+    case j: BaseJoinExec => Some(j)
+    case _ => ExecutedPlans.children(p).view.flatMap(topJoin).headOption
+  }
+
+  /** The shuffles a join side reads directly (broadcasts are looked
+    * through: a broadcast side is built from what its stage read). */
+  private def nearestShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+    p match {
+      case e: ShuffleExchangeExec => Seq(e)
+      case _ => ExecutedPlans.children(p).flatMap(nearestShuffles)
+    }
+
   test("q176's all-pairs join reads one explicit round-robin exchange " +
       "on both sides, so its kernel runs on every core") {
     val full = EntityRes.q176Pieces(s,
       customersDir(Seq((1L, "Acme Corp", 1, 0.0))))("full")
     full.collect()
-    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case _ => p.children
-    }
-    def topJoin(p: SparkPlan): Option[BaseJoinExec] = p match {
-      case j: BaseJoinExec => Some(j)
-      case _ => kids(p).view.flatMap(topJoin).headOption
-    }
-    // the shuffles a join side reads directly (broadcasts are looked
-    // through: a broadcast side is built from what its stage read)
-    def nearestShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
-      case e: ShuffleExchangeExec => Seq(e)
-      case _ => kids(p).flatMap(nearestShuffles)
-    }
     val plan = full.queryExecution.executedPlan
     val join = topJoin(plan).getOrElse(fail(s"no join in\n$plan"))
     val n = s.sparkContext.defaultParallelism
@@ -274,6 +271,28 @@ class EntityResSpec extends AnyFunSuite {
       assert(ex.nonEmpty && ex.forall(_.outputPartitioning ===
         RoundRobinPartitioning(n)), s"join side:\n$side")
     }
+  }
+
+  test("q176 computes elig once: both join sides read ONE exchange, " +
+      "one rank Window and one CollectMetrics run, and the cap metrics " +
+      "keep their values") {
+    val full = EntityRes.q176Pieces(s,
+      customersDir(Seq((1L, "Acme Corp", 1, 0.0))))("full")
+    full.collect()
+    val plan = full.queryExecution.executedPlan
+    val sides = topJoin(plan).getOrElse(fail(s"no join in\n$plan"))
+      .children.map(nearestShuffles)
+    assert(sides.forall(_.size == 1) && (sides(0).head eq sides(1).head),
+      s"join sides read different exchanges:\n$plan")
+    val nodes = ExecutedPlans.nodes(plan)
+    assert(nodes.count(_.isInstanceOf[WindowExec]) === 1, plan)
+    assert(nodes.count(_.isInstanceOf[CollectMetricsExec]) === 1, plan)
+    // the planted >TruthCap block is the largest capped block
+    val big = EntityRes.ErRecallBigFillers + 4L
+    val m = full.queryExecution.observedMetrics("q176_er_recall_truth_cap")
+    assert(m.getAs[Long]("max_capped_block_rows") === big)
+    assert(m.getAs[Long]("max_member_sample_mod") ===
+      (big + EntityRes.ErRecallTruthCap - 1) / EntityRes.ErRecallTruthCap)
   }
 
   test("q101 plans block-local pair expansion only: no cartesian, " +

@@ -1,8 +1,12 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ExecutedPlans, SparkSpec}
+import graft.functions.CountBelow
 
 /** q119 KS drift and q120 skyline on hand-computed fixtures — both
   * exercise the bucket-offset + in-bucket-window distributed prefix
@@ -26,6 +30,30 @@ class OrderStatsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5)))
     assert(rows === Seq((200L, 4L, 2L, 2L, 0L, 500000L)))
+  }
+
+  test("q119 buckets by count_below and reads n1/n2 off the offsets " +
+      "fold: no bucket lambda and no totals aggregate run") {
+    import s.implicits._
+    val dir = tmp("q119p")
+    Seq((2L, 1.00), (4L, 2.00), (1L, 3.00))
+      .toDF("o_orderkey", "o_totalprice")
+      .write.parquet(dir.resolve("orders.parquet").toString)
+    val df = OrderStats.q119KsDrift(s, dir.toString)
+    df.collect()
+    val nodes = ExecutedPlans.nodes(df.queryExecution.executedPlan)
+    val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(exprs.exists(_.isInstanceOf[CountBelow]))
+    // the offsets fold over `arr` is the one aggregate lambda left
+    assert(!exprs.exists {
+      case a: ArrayAggregate => a.argument.references.exists(_.name == "bnd")
+      case _ => false
+    })
+    assert(!nodes.exists {
+      case a: BaseAggregateExec => a.groupingExpressions.isEmpty &&
+        a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[Sum])
+      case _ => false
+    }, "an ungrouped sum aggregate (the old totals) still runs")
   }
 
   test("q119: empty half guards the division") {
