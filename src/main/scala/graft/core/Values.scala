@@ -79,7 +79,6 @@ object JsonUtil {
     try Right(mapper.readTree(s)) catch {
       case e: Exception => Left(e.getMessage)
     }
-  def mapperInstance: com.fasterxml.jackson.databind.ObjectMapper = mapper
 
   def quote(s: String): String = {
     val sb = new StringBuilder("\"")

@@ -21,6 +21,10 @@ import graft.storage.StorageBackend
   * Writes are serialized per model (single-writer discipline): the
   * reference has unsynchronized read-modify-write races across its HTTP
   * workers (§3.2 of SURVEY.md); we lock per model name instead.
+  * A successful write then appends its event to the change log, if
+  * one is given, still under the model's lock. The log takes its own
+  * monitor for the append, so appends from different models are
+  * ordered there; each is a local file write, not a Spark job.
   */
 final class CrudEngine(spark: SparkSession, backend: StorageBackend,
     changeLog: Option[graft.streaming.ChangeLog] = None) {

@@ -54,8 +54,6 @@ object Dedup {
     * shingle hash material. (min of substrings over all shingles —
     * not a substring of one min — so each k is an independent-ish
     * minhash.) */
-  def minhashSig(hashes: Column, k: Int): Column =
-    array_min(transform(hashes, h => substring(h, k * 8 + 1, 8)))
   private def minhashSigSql(hashesExpr: String, k: Int): String =
     s"list_min(list_transform($hashesExpr, h -> substring(h, ${k * 8 + 1}, 8)))"
 

@@ -279,7 +279,6 @@ object Similarity {
 
   val DedupBands = 6
   val DedupBandBits = 20
-  val DedupPlanes = DedupBands * DedupBandBits // 120, spanning 2 Longs
 
   /** dedup_embedding: top-50 most-similar vector pairs among LSH-banded
     * candidates — the embedding-cosine near-duplicate miner.

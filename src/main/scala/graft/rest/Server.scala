@@ -148,8 +148,8 @@ final class Server(registry: Registry, engine: CrudEngine, port: Int,
   }
 
   /** Shared SSE poll loop: catch-up from `Last-Event-ID` (default 0),
-    * then poll the changelog's cached snapshot (`eventsSince` — idle
-    * polls compare two counters, no Spark job) every PollMs. A
+    * then poll the changelog's held events (`eventsSince` — an
+    * in-memory filter, no Spark job) every PollMs. A
     * `: keep-alive` comment goes out every KeepAliveMs of idle, so a
     * vanished client surfaces as an IOException and frees its handler
     * thread instead of looping forever. `?max_events=N` closes after N

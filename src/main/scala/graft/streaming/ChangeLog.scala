@@ -1,8 +1,19 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -18,6 +29,16 @@ import graft.crud.Records.Record
   * it. This is the Spark realization of the subscription surface the
   * reference stubs out (`graphql.rs:193,251-253,353`): a changelog
   * topic per store, consumed with `readStream`.
+  *
+  * The driver writes the log and holds it. An append writes one
+  * parquet file on the calling thread (parquet-hadoop, no Spark job),
+  * under a hidden temp name that one rename publishes, and then adds
+  * the event to an in-memory copy of the persisted log; SSE polls
+  * ([[eventsSince]]) and compaction read that copy. Spark reads the
+  * directory only for [[all]], [[subscribe]] and once at open. Hidden
+  * files are invisible to Spark's file sources, so readers only ever
+  * see whole files. One process owns a log directory, as the
+  * in-memory sequence counter already assumes.
   */
 object ChangeLog {
   /** Auto-compact once the log exceeds this multiple of live keys. */
@@ -26,11 +47,17 @@ object ChangeLog {
     * (anti-stampede floor: folded logs retain tombstones, so a
     * delete-heavy log can legitimately sit above the ratio). */
   val DefaultAutoCompactMinAppends = 256L
+
+  private val TempSuffix = ".tmp"
+
+  /** Published files are named by the highest seq they hold. */
+  private def fileName(lastSeq: Long): String = f"$lastSeq%020d.parquet"
 }
 
 final class ChangeLog(spark: SparkSession, dir: String,
     autoCompactRatio: Long = ChangeLog.DefaultAutoCompactRatio,
     autoCompactMinAppends: Long = ChangeLog.DefaultAutoCompactMinAppends) {
+  import ChangeLog._
 
   private val schema = StructType(Seq(
     StructField("model", StringType, nullable = false),
@@ -39,8 +66,30 @@ final class ChangeLog(spark: SparkSession, dir: String,
     StructField("record", StringType, nullable = false),
     StructField("seq", LongType, nullable = false)))
 
-  repairInterruptedCompaction()
-  Files.createDirectories(Paths.get(dir))
+  /** `schema` as parquet types, the way Spark writes it: every column
+    * optional, strings `binary (STRING)`, `seq` int64. */
+  private val fileSchema = new MessageType("spark_schema",
+    schema.fields.toList.map[Type] { f =>
+      f.dataType match {
+        case StringType => Types.optional(PrimitiveTypeName.BINARY)
+          .as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case LongType => Types.optional(PrimitiveTypeName.INT64).named(f.name)
+      }
+    }.asJava)
+
+  private val live = Paths.get(dir)
+
+  // One monitor (`this`) covers open, append and compaction, so the
+  // held events always equal the files on disk. Readers of `held` take
+  // no lock: it is replaced, never mutated.
+  @volatile private var held: Vector[Row] = synchronized {
+    repairInterruptedCompaction()
+    Files.createDirectories(live)
+    // a crashed append leaves its hidden temp file; it holds no event
+    Using.resource(Files.list(live))(_.iterator.asScala.toVector)
+      .filter(p => isTemp(p.getFileName.toString)).foreach(Files.delete)
+    all().collect().sortBy(seqOf).toVector
+  }
 
   // ---- auto-compaction policy state --------------------------------
   // The trigger is size/ratio-based: once the log holds more than
@@ -48,85 +97,70 @@ final class ChangeLog(spark: SparkSession, dir: String,
   // rows landed since the last compaction — the anti-stampede floor,
   // since compaction RETAINS one folded row per key incl. delete
   // tombstones and so never shrinks the log below key count), the
-  // append path folds history down via [[compact]]. Counters are
-  // in-memory, seeded from the persisted log at construction; appends
-  // maintain them exactly (create/update mark the key live, delete
-  // kills it), so deciding "should we compact" costs two longs — no
-  // Spark job runs until the trigger actually fires.
-  private val liveKeys =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
-  private val logRows = new java.util.concurrent.atomic.AtomicLong(0L)
-  @volatile private var rowsAtLastCompact = 0L
-  private val compacting = new java.util.concurrent.atomic.AtomicBoolean(false)
-
+  // append path folds history down via [[compact]]. Live keys are
+  // seeded from each key's LATEST op at open and kept exact by
+  // appends, so deciding "should we compact" costs two comparisons.
+  private val liveKeys = scala.collection.mutable.HashSet.empty[(String, String)]
+  private var rowsAtLastCompact = 0L
   // Resume the sequence from what a previous process persisted — a
-  // fresh AtomicLong(0) would REUSE seq numbers after a restart, so a
-  // client reconnecting with Last-Event-ID = n would silently skip
-  // every post-restart event numbered ≤ n (ServerSpec pins the
-  // restart/resume cycle). The same pass seeds the auto-compaction
-  // counters (log rows + live keys from each key's LATEST op).
-  private val seq = new java.util.concurrent.atomic.AtomicLong({
-    val rows = all().select(col("model"), col("pk"), col("op"), col("seq"))
-      .collect().sortBy(_.getAs[Long]("seq"))
-    logRows.set(rows.length.toLong)
-    rowsAtLastCompact = 0L
-    rows.foreach { r =>
-      val key = (r.getAs[String]("model"), r.getAs[String]("pk"))
-      if (r.getAs[String]("op") == "delete") liveKeys.remove(key)
-      else liveKeys.add(key)
-    }
-    if (rows.isEmpty) 0L else rows.last.getAs[Long]("seq")
-  })
+  // fresh counter would REUSE seq numbers after a restart, so a client
+  // reconnecting with Last-Event-ID = n would silently skip every
+  // post-restart event numbered ≤ n (ServerSpec pins the
+  // restart/resume cycle).
+  private var seq = held.lastOption.map(seqOf).getOrElse(0L)
+  held.foreach(markLive)
 
-  // append/compact coordination: appends (any model, concurrently) hold
-  // the READ half; compaction holds the WRITE half for its directory
-  // swap, so no append can land between "fold the log" and "replace the
-  // files" and be lost.
-  private val rw = new java.util.concurrent.locks.ReentrantReadWriteLock()
+  private def seqOf(r: Row): Long = r.getAs[Long]("seq")
+  private def keyOf(r: Row): (String, String) =
+    (r.getAs[String]("model"), r.getAs[String]("pk"))
+  private def markLive(r: Row): Unit =
+    if (r.getAs[String]("op") == "delete") liveKeys -= keyOf(r)
+    else liveKeys += keyOf(r)
+  private def isTemp(name: String): Boolean =
+    name.startsWith(".") && name.endsWith(TempSuffix)
 
   /** Append one change event (called under the engine's per-model
     * write lock, so appends are ordered per model), then give the
-    * auto-compaction policy a chance to fold history. */
-  def append(m: ModelDefinition, op: String, rec: Record): Unit = {
-    rw.readLock().lock()
-    try {
-      val pkJson = Records.valueJson(rec(m.primaryKey))
-      val row = Row(m.modelName.pluralCamel, op, pkJson,
-        Records.toJson(rec, m), seq.incrementAndGet())
-      spark.createDataFrame(java.util.List.of(row), schema)
-        .write.mode(SaveMode.Append).parquet(dir)
-      val key = (m.modelName.pluralCamel, pkJson)
-      if (op == "delete") liveKeys.remove(key) else liveKeys.add(key)
-      logRows.incrementAndGet()
-      written.incrementAndGet()
-    } finally rw.readLock().unlock()
-    // outside the read lock: compact() takes the WRITE half, and a
-    // read→write upgrade would deadlock against ourselves
-    maybeAutoCompact()
+    * auto-compaction policy a chance to fold history. The seq is taken
+    * only once the event's file is in place, so a failed write leaves
+    * no gap. */
+  def append(m: ModelDefinition, op: String, rec: Record): Unit = synchronized {
+    val row: Row = new GenericRowWithSchema(Array(m.modelName.pluralCamel, op,
+      Records.valueJson(rec(m.primaryKey)), Records.toJson(rec, m), seq + 1), schema)
+    val name = fileName(seq + 1)
+    val tmp = live.resolve("." + name + TempSuffix)
+    writeFile(tmp, Seq(row))
+    Files.move(tmp, live.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    seq += 1
+    held :+= row
+    markLive(row)
+    if (held.size - rowsAtLastCompact >= autoCompactMinAppends &&
+        held.size > autoCompactRatio * math.max(liveKeys.size.toLong, 1L))
+      compact(seq)
   }
 
-  /** Fire [[compact]] when the policy says the log is worth folding.
-    * `compacting` keeps concurrent appends from stampeding into
-    * redundant compactions (the write lock would serialize them, but
-    * each would still rewrite the directory); the min-appends floor
-    * keeps a delete-heavy log — whose folded form legitimately holds
-    * more rows than live keys (tombstones) — from re-triggering on
-    * every append. */
-  private def maybeAutoCompact(): Unit = {
-    val rows = logRows.get()
-    if (rows - rowsAtLastCompact >= autoCompactMinAppends &&
-        rows > autoCompactRatio * math.max(liveKeys.size.toLong, 1L) &&
-        compacting.compareAndSet(false, true)) {
-      try compact(seq.get())
-      finally compacting.set(false)
+  /** One parquet file holding `rows`, written on the calling thread. A
+    * leftover file at `path` (a failed earlier attempt) is replaced. */
+  private def writeFile(path: Path, rows: Seq[Row]): Unit = {
+    val groups = new SimpleGroupFactory(fileSchema)
+    Using.resource(ExampleParquetWriter.builder(new LocalOutputFile(path))
+        .withConf(new PlainParquetConfiguration()).withType(fileSchema)
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+        .build()) { w =>
+      rows.foreach { r =>
+        val g = groups.newGroup()
+        schema.fieldNames.foreach(n => r.getAs[Any](n) match {
+          case s: String => g.append(n, s)
+          case l: Long => g.append(n, l)
+        })
+        w.write(g)
+      }
     }
   }
 
   /** Live (non-deleted) key count as tracked by the policy state —
     * exposed for specs. */
-  private[streaming] def liveKeyCount: Int = liveKeys.size
-  /** Current in-memory log row count — exposed for specs. */
-  private[streaming] def logRowCount: Long = logRows.get()
+  private[streaming] def liveKeyCount: Int = synchronized(liveKeys.size)
 
   /** Compact the log: fold every event with seq ≤ `upToSeq` down to
     * the LATEST event per (model, pk) — delete tombstones retained —
@@ -140,48 +174,32 @@ final class ChangeLog(spark: SparkSession, dir: String,
     * key's final state ≤ upToSeq (base, seq > L by definition of not
     * having seen it); nothing ≤ L can be re-delivered because folded
     * rows kept seqs ≤ L and are filtered exactly like the originals
-    * were. After compaction a snapshot refresh reads O(live keys +
-    * tail) rows instead of O(full history) — the log's analogue of the
-    * POINTOPS point-op bound; compaction itself reads the history
-    * ONCE, amortizing it.
+    * were. After compaction the held log is O(live keys + tail) rows
+    * instead of O(full history).
     *
-    * The fold is one window partitioned by (model, pk) — shuffled on
-    * the key, no driver materialization, scale-safe. Concurrency:
-    * takes the write half of the append lock, so appends (readers)
-    * drain first and block during the swap. A LIVE `readStream`
-    * subscription tracks FILES, not seqs — the rewrite presents folded
-    * rows as new files and the stream would re-emit them — so run
-    * compaction when no streaming query is attached, or
-    * `dropDuplicates("seq")` downstream of [[subscribe]]. */
-  def compact(upToSeq: Long): Unit = {
-    rw.writeLock().lock()
-    try {
-      repairInterruptedCompaction()
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{desc, row_number}
-      val log = all()
-      val base = log.filter(col("seq") <= upToSeq)
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col("model"), col("pk"))
-            .orderBy(desc("seq"))))
-        .filter(col("_rn") === 1).drop("_rn")
-      val keep = base.unionByName(log.filter(col("seq") > upToSeq))
-      val tmp = Paths.get(dir + ".compacting")
-      // one file per model-ish chunk is plenty for a serving-side log;
-      // the win over the 1-row-per-append layout is already ~|events|×
-      keep.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val old = Paths.get(dir + ".old")
-      Files.move(Paths.get(dir), old)
-      Files.move(tmp, Paths.get(dir))
-      deleteTree(old)
-      synchronized { cachedRows = Array.empty; cachedWritten = -1L }
-      // reseed the auto-compaction floor from the folded log's true
-      // size (base keys + tombstones + tail) so the policy measures
-      // growth SINCE this compaction, not against the old history
-      val n = all().count()
-      logRows.set(n)
-      rowsAtLastCompact = n
-    } finally rw.writeLock().unlock()
+    * The fold runs over the held events on the driver and the result
+    * is written as one file, so compaction launches no Spark job. It
+    * holds the log's monitor, so no append lands between the fold and
+    * the directory swap. A LIVE `readStream` subscription tracks FILES,
+    * not seqs — the rewrite presents folded rows as new files and the
+    * stream would re-emit them — so run compaction when no streaming
+    * query is attached, or `dropDuplicates("seq")` downstream of
+    * [[subscribe]]. */
+  def compact(upToSeq: Long): Unit = synchronized {
+    repairInterruptedCompaction()
+    val (history, tail) = held.partition(seqOf(_) <= upToSeq)
+    val base = history.reverseIterator.distinctBy(keyOf).toVector.reverse
+    val folded = base ++ tail
+    val tmp = Paths.get(dir + ".compacting")
+    Files.createDirectories(tmp)
+    folded.lastOption.foreach(r => writeFile(tmp.resolve(fileName(seqOf(r))), folded))
+    val old = Paths.get(dir + ".old")
+    Files.move(live, old)
+    Files.move(tmp, live)
+    deleteTree(old)
+    held = folded
+    // measure growth SINCE this compaction, not against the old history
+    rowsAtLastCompact = folded.size
   }
 
   /** Crash recovery for the two-move directory swap in [[compact]].
@@ -200,17 +218,15 @@ final class ChangeLog(spark: SparkSession, dir: String,
     *    live dir is authoritative after the steps above.
     */
   private def repairInterruptedCompaction(): Unit = {
-    val live = Paths.get(dir)
     val old = Paths.get(dir + ".old")
     if (!Files.exists(live) && Files.exists(old)) Files.move(old, live)
     deleteTree(Paths.get(dir + ".compacting"))
     if (Files.exists(live)) deleteTree(old)
   }
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
+  private def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(Files.walk(p))(_.iterator().asScala.toSeq)
+      Using.resource(Files.walk(p))(_.iterator().asScala.toSeq)
         .reverse.foreach(Files.deleteIfExists(_))
     }
 
@@ -222,35 +238,10 @@ final class ChangeLog(spark: SparkSession, dir: String,
   /** Batch view (for catch-up reads). */
   def all(): DataFrame = spark.read.schema(schema).parquet(dir)
 
-  // ---- poller snapshot cache ---------------------------------------
-  // SSE subscribers poll every 500 ms; without a cache each poll of
-  // each subscriber runs a full Spark collect() even when nothing
-  // changed — many idle subscribers become continuous Spark jobs. An
-  // in-memory counter already knows whether an append happened, so
-  // idle polls compare two longs and touch Spark not at all; at most
-  // ONE collect runs per append regardless of how many subscribers
-  // are connected. The counter is `written`, bumped AFTER the append's
-  // parquet write, not `seq`, which advances BEFORE it: a poll between
-  // the two would snapshot the directory without the new event and
-  // mark it current, and the event would reach no subscriber until
-  // the next append (a live subscription timed out that way).
-  private val written = new java.util.concurrent.atomic.AtomicLong(0L)
-  @volatile private var cachedRows: Array[Row] = Array.empty
-  @volatile private var cachedWritten: Long = -1L
-
-  /** All events with seq > lastSeq, ascending — served from the cached
-    * snapshot, which is refreshed only when an append has been written
-    * since the last collect. The initial refresh (cachedWritten = -1)
-    * also loads any events persisted by a previous process, so
-    * catch-up-from-0 semantics are unchanged. */
-  def eventsSince(lastSeq: Long): Array[Row] = {
-    val cur = written.get()
-    if (cur > cachedWritten) synchronized {
-      if (cur > cachedWritten) {
-        cachedRows = all().orderBy(col("seq")).collect()
-        cachedWritten = cur
-      }
-    }
-    cachedRows.filter(_.getAs[Long]("seq") > lastSeq)
-  }
+  /** All events with seq > lastSeq, ascending, from the held log: no
+    * Spark job and no lock. An event is held only once its file is in
+    * place, and the held log includes whatever a previous process
+    * persisted, so catch-up-from-0 sees the whole log. */
+  def eventsSince(lastSeq: Long): Vector[Row] =
+    held.filter(seqOf(_) > lastSeq)
 }

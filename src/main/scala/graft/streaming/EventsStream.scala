@@ -126,18 +126,6 @@ object EventsStream {
       .select(col("event_id"), col("event_time"), col("h"))
   }
 
-  /** Sliding-window variant (overlapping windows, same watermark). */
-  def slidingCounts(spark: SparkSession, dir: String): DataFrame = {
-    readStream(spark, dir)
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-      .withWatermark("event_time", "1 hour")
-      .groupBy(window(col("event_time"), "1 hour", "30 minutes"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"))
-  }
-
   /** The customer dimension projected to the enrichment key — shared
     * by [[enrichedSegmentCounts]] and its batch twin so stream and
     * batch join the identical relation. */
