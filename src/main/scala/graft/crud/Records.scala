@@ -44,7 +44,8 @@ object Records {
   /** `check_constraints` (`model.rs:300-302`, a stub in the reference;
     * real checks here per SURVEY §2.1): every declared constraint must
     * hold on the provided non-null values; array attrs are checked
-    * element-wise. */
+    * element-wise. String lengths count code points, as Spark's
+    * `length` does in bulk load's [[CrudEngine.constraintPredicate]]. */
   def checkConstraints(rec: Record, model: ModelDefinition)
       : Either[String, Record] = {
     def prim(attr: String, c: Constraint, v: PrimValue): Boolean = (c, v) match {
@@ -52,8 +53,10 @@ object Records {
       case (Constraint.MaxValue(m), PrimValue.IntVal(x)) => x <= m
       case (Constraint.MinValue(m), PrimValue.FloatVal(x)) => x >= m
       case (Constraint.MaxValue(m), PrimValue.FloatVal(x)) => x <= m
-      case (Constraint.MinLength(m), PrimValue.StrVal(s)) => s.length >= m
-      case (Constraint.MaxLength(m), PrimValue.StrVal(s)) => s.length <= m
+      case (Constraint.MinLength(m), PrimValue.StrVal(s)) =>
+        s.codePointCount(0, s.length) >= m
+      case (Constraint.MaxLength(m), PrimValue.StrVal(s)) =>
+        s.codePointCount(0, s.length) <= m
       case (Constraint.MatchesRegex(p), PrimValue.StrVal(s)) =>
         p.r.findFirstIn(s).isDefined
       case (Constraint.OneOf(vs), PrimValue.StrVal(s)) => vs.contains(s)

@@ -45,15 +45,20 @@ final class Executor(registry: Registry, engine: CrudEngine) {
 
   def handlePost(query: String, operationName: Option[String],
       variables: Map[String, GqlValue]): GqlResult =
+    prepare(query, operationName).fold(identity, run(_, variables))
+
+  /** Parse, validate and pick the operation once: the request-level
+    * errors of [[handlePost]] on the left, the operation to hand to
+    * [[run]] or [[subscriptionPlanOf]] on the right. */
+  def prepare(query: String, operationName: Option[String])
+      : Either[GqlResult, Executor.Prepared] =
     Parser.parse(query) match {
-      case Left(syntaxErr) => GqlResult.ofError(syntaxErr)
+      case Left(syntaxErr) => Left(GqlResult.ofError(syntaxErr))
       case Right(doc) =>
         val verrs = Validator.validate(doc, schema)
-        if (verrs.nonEmpty) GqlResult(None, verrs)
-        else pickOperation(doc, operationName) match {
-          case Left(err) => GqlResult.ofError(err)
-          case Right(op) => execute(op, doc, variables)
-        }
+        if (verrs.nonEmpty) Left(GqlResult(None, verrs))
+        else pickOperation(doc, operationName)
+          .map(Executor.Prepared(_, doc)).left.map(GqlResult.ofError)
     }
 
   /** `get_executing_operation` (`graphql.rs:291-305`). */
@@ -71,8 +76,10 @@ final class Executor(registry: Registry, engine: CrudEngine) {
           .toRight(s"""operation with name "$n" does not exist""")
     }
 
-  private def execute(op: Operation, doc: Document,
-      variables: Map[String, GqlValue]): GqlResult = {
+  /** Execute a prepared operation. */
+  def run(p: Executor.Prepared, variables: Map[String, GqlValue])
+      : GqlResult = {
+    val Executor.Prepared(op, doc) = p
     var data = GData.empty
     var errors = Vector.empty[GqlError]
     // root-level fragments flattened (reference: todo!(), here: uniform)
@@ -203,24 +210,19 @@ final class Executor(registry: Registry, engine: CrudEngine) {
     * [[subscriptionFrame]]) apply [[projectEvent]] to each change. */
   def subscriptionPlan(query: String, operationName: Option[String])
       : Either[String, Executor.SubscriptionPlan] =
-    Parser.parse(query) match {
-      case Left(syntaxErr) => Left(syntaxErr)
-      case Right(doc) =>
-        val verrs = Validator.validate(doc, schema)
-        if (verrs.nonEmpty) Left(verrs.head.message)
-        else pickOperation(doc, operationName) match {
-          case Left(err) => Left(err)
-          case Right(op) if op.opType != Subscription =>
-            Left("operation is not a subscription")
-          case Right(op) =>
-            fieldsOf(op.selections, doc) match {
-              case Vector(field) =>
-                registry.lookup(field.name).map(m =>
-                  Executor.SubscriptionPlan(m, field, doc))
-              case _ =>
-                Left("a subscription operation must have exactly one root field")
-            }
-        }
+    prepare(query, operationName).left.map(_.errors.head.message)
+      .flatMap(subscriptionPlanOf)
+
+  /** [[subscriptionPlan]] of an already prepared operation. */
+  def subscriptionPlanOf(p: Executor.Prepared)
+      : Either[String, Executor.SubscriptionPlan] =
+    if (p.op.opType != Subscription) Left("operation is not a subscription")
+    else fieldsOf(p.op.selections, p.doc) match {
+      case Vector(field) =>
+        registry.lookup(field.name).map(m =>
+          Executor.SubscriptionPlan(m, field, p.doc))
+      case _ =>
+        Left("a subscription operation must have exactly one root field")
     }
 
   /** One subscription event: the changed record projected through the
@@ -290,6 +292,9 @@ final class Executor(registry: Registry, engine: CrudEngine) {
 }
 
 object Executor {
+
+  /** A parsed, validated document and its executing operation. */
+  final case class Prepared(op: Ast.Operation, doc: Ast.Document)
 
   /** A resolved subscription: which model's changelog to consume and
     * how to project each change event. */

@@ -235,11 +235,12 @@ final class Server(registry: Registry, engine: CrudEngine, port: Int,
         // subscription documents stream as text/event-stream (the
         // GraphQL-over-SSE shape); anything else — including every
         // parse/validation error — takes the request/response path
-        executor.subscriptionPlan(query, opName) match {
-          case Right(plan) if changeLog.isDefined =>
-            streamSubscription(ex, plan)
-          case _ =>
-            val result = executor.handlePost(query, opName, variables)
+        val prepared = executor.prepare(query, opName)
+        prepared.toOption.filter(_ => changeLog.isDefined)
+          .flatMap(executor.subscriptionPlanOf(_).toOption) match {
+          case Some(plan) => streamSubscription(ex, plan)
+          case None =>
+            val result = prepared.fold(identity, executor.run(_, variables))
             // errors-only → 400, else 200 (`server.rs:183-186`)
             val status = if (result.isErrorOnly) 400 else 200
             respond(ex, status, Executor.toJson(result))

@@ -1,6 +1,7 @@
 package graft.storage
 
-import java.nio.file.Path
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -16,7 +17,7 @@ import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types.StructType
 
@@ -30,8 +31,7 @@ import graft.core.{AttrType, ModelDefinition, PrimValue, PrimitiveType}
   * point op touches exactly one bucket directory and a point write
   * rewrites one bucket atomically (write-temp-then-swap). With B
   * buckets, point ops are O(|table|/B); at cluster scale B is sized so
-  * a bucket fits in one executor's working set. Layout and atomicity
-  * live in [[BucketedFileBackend]]; this binds the parquet format.
+  * a bucket fits in one executor's working set.
   *
   * Serving reads bypass Spark: files are read on the calling thread
   * through parquet-hadoop, with no Hadoop `FileSystem` and no job.
@@ -43,8 +43,79 @@ import graft.core.{AttrType, ModelDefinition, PrimValue, PrimitiveType}
   * `table` and writes stay DataFrames.
   */
 final class ParquetBackend(spark: SparkSession, root: String,
-    buckets: Int = 64)
-  extends BucketedFileBackend(spark, root, buckets, "parquet", ".parquet") {
+    buckets: Int = 64) extends StorageBackend {
+
+  private def modelDir(m: ModelDefinition): Path =
+    Paths.get(root, m.modelName.pluralCamel)
+  private def bucketDir(m: ModelDefinition, v: PrimValue): Path =
+    modelDir(m).resolve(s"_bucket=${StorageBackend.bucketOf(v.raw, buckets)}")
+
+  override def table(model: ModelDefinition): DataFrame = {
+    val dirs = bucketDirs(model)
+    if (dirs.isEmpty) StorageBackend.empty(spark, model)
+    // schema pinned: partition-col inference off, read data columns only.
+    // The bucket directories are passed as paths rather than as a
+    // `_bucket=*` glob, whose metadata probe logs a stack trace per load.
+    else spark.read.schema(model.schema).parquet(dirs.map(_.toString): _*)
+  }
+
+  /** The model's `_bucket=N` directories in bucket order; empty if the
+    * model has no directory. Temp directories (`.tmp-*`) are skipped. */
+  private def bucketDirs(m: ModelDefinition): Seq[Path] = {
+    val dir = modelDir(m)
+    if (!Files.isDirectory(dir)) Nil
+    else Using.resource(Files.list(dir))(_.iterator().asScala.filter { p =>
+      p.getFileName.toString.startsWith("_bucket=") && Files.isDirectory(p)
+    }.toVector).sortBy(_.getFileName.toString.stripPrefix("_bucket=").toInt)
+  }
+
+  /** The data files of one bucket directory in name order; empty if it
+    * does not exist. Hidden (`.`) and marker (`_`) files are skipped,
+    * as Spark's file index skips them. */
+  private def dataFiles(bucket: Path): Seq[Path] =
+    if (!Files.isDirectory(bucket)) Nil
+    else Using.resource(Files.list(bucket))(_.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }.toVector).sortBy(_.getFileName.toString)
+
+  /** The data files of the bucket `v` maps to (see [[dataFiles]]). */
+  private def bucketFiles(m: ModelDefinition, v: PrimValue): Seq[Path] =
+    dataFiles(bucketDir(m, v))
+
+  override def slice(model: ModelDefinition, v: PrimValue): DataFrame =
+    if (bucketFiles(model, v).isEmpty) StorageBackend.empty(spark, model)
+    else spark.read.schema(model.schema).parquet(bucketDir(model, v).toString)
+
+  override def writeSlice(model: ModelDefinition, v: PrimValue,
+      df: DataFrame): Unit = {
+    val tmp = modelDir(model).resolve(s".tmp-${java.util.UUID.randomUUID()}")
+    Files.createDirectories(modelDir(model))
+    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val target = bucketDir(model, v)
+    deleteRecursively(target)
+    Files.move(tmp, target)
+  }
+
+  override def overwrite(model: ModelDefinition, df: DataFrame): Unit = {
+    import org.apache.spark.sql.functions._
+    // codegen'd routing expression (dispatches on the pk column's Spark
+    // type at planning time; semantics identical to driver-side bucketOf)
+    val bucketCol = BucketRoute(col(model.primaryKey), buckets)
+    val tmp = Paths.get(root, s".tmp-${java.util.UUID.randomUUID()}")
+    df.withColumn("_bucket", bucketCol)
+      .write.mode(SaveMode.Overwrite).partitionBy("_bucket")
+      .parquet(tmp.toString)
+    val target = modelDir(model)
+    deleteRecursively(target)
+    Files.createDirectories(target.getParent)
+    Files.move(tmp, target)
+  }
+
+  private def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p))
+      Using.resource(Files.walk(p))(_.sorted(Comparator.reverseOrder[Path]())
+        .iterator().asScala.foreach(Files.delete))
 
   override def lookup(model: ModelDefinition, v: PrimValue): Option[Row] = {
     val filter = FilterCompat.get(ParquetBackend.pkEquals(model.primaryKey, v))
@@ -57,7 +128,7 @@ final class ParquetBackend(spark: SparkSession, root: String,
   override def rows(model: ModelDefinition, columns: Seq[String])
       : Vector[Row] = {
     val schema = StructType(columns.map(model.schema(_)))
-    tableFiles(model).toVector.flatMap { f =>
+    bucketDirs(model).flatMap(dataFiles).toVector.flatMap { f =>
       Using.resource(new ParquetBackend.ModelReader(f, schema).build())(r =>
         Iterator.continually(r.read()).takeWhile(_ != null)
           .map(ParquetBackend.toRow(_, model, schema)).toVector)

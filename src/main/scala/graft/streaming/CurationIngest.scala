@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.Dedup
-
 /** The composed curation-at-ingest pipeline a production trainer
   * ships: ONE stream over the raw landing directory that, per
   * micro-batch, (1) applies the q84 stage-1 quality gates (token
@@ -16,11 +14,9 @@ import graft.operators.Dedup
   * goes raw parquet → verdict → shard assignment inside one trigger,
   * and the trainer's shard manifest grows in lockstep with curation.
   *
-  * Until round 12 the two ingest twins were gated separately but
-  * never run as this chain (round-12 judge ask #6);
-  * CurationIngestSpec now cross-gates the composition: fed in the
-  * shard permutation's own (md5 key, doc_id) order, the chained
-  * stream's final assignments are BIT-IDENTICAL to the batch
+  * CurationIngestSpec cross-gates the composition: fed in the shard
+  * permutation's own (md5 key, doc_id) order, the chained stream's
+  * final assignments are BIT-IDENTICAL to the batch
   * `Shards.layoutOf` of exactly the docs the stream accepted — the
   * q84→q171 batch composition on the same corpus — and every
   * conservation property holds under arbitrary arrival order (the
@@ -32,11 +28,7 @@ import graft.operators.Dedup
   * dropped before the index probe; the gate is recomputable from the
   * doc alone, so provenance needs no row) — and assignment rows
   * (shard_id, position, doc_id, lang, n_tokens, token_offset,
-  * batch_id) to `shardsDir`. Both writes are idempotent per batch
-  * (dynamic partition overwrite, the twins' shared recipe), and the
-  * shard tail state defers recovery into the first foreachBatch with
-  * the `batch_id < current` replay filter ([[ShardIngest]]'s
-  * crash-window fix applies to the composition unchanged).
+  * batch_id) to `shardsDir`, both through the [[Ingest]] recipe.
   *
   * Scale posture is the twins', composed: per batch — map-side gate
   * kernels, one band equi-join probing only the batch's buckets,
@@ -60,85 +52,26 @@ object CurationIngest {
       .select(col("doc_id"), col("text"), col("lang"), col("n_tokens"))
 
   /** Start the chained curate→shard stream (see object scaladoc).
-    * Restart recovery composes the twins' recipes: the verdict index
-    * reseeds from docs the durable verdicts ACCEPTED (signatures
-    * re-derived from the landing files — the DocIngest recipe, with
-    * the same explicit is-there-anything-durable filesystem check, so
-    * a corrupt verdict store raises instead of silently resetting the
-    * index), and the shard tails recover inside the first
-    * foreachBatch with the `batch_id < current` replay filter (the
-    * ShardIngest recipe). A replayed batch's own accepted docs being
-    * pre-seeded is harmless on the verdict side — candidates are
-    * DISTINCT pairs with self-pairs excluded. */
+    * Restart composes the twins' own rules: the verdict index reseeds
+    * from the docs the durable verdicts accepted ([[DocIngest]]), and
+    * the shard tails recover inside the first foreachBatch with the
+    * `batch_id < current` replay filter ([[ShardIngest]]). */
   def curateAndShard(spark: SparkSession, corpus: DataFrame,
       landingDir: String, verdictsDir: String, shardsDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val vPath = new org.apache.hadoop.fs.Path(verdictsDir)
-    val vFs = vPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasVerdicts = vFs.exists(vPath) && vFs.listStatus(vPath)
-      .exists(_.getPath.getName.startsWith("batch_id="))
-    val seed =
-      if (!hasVerdicts) corpus.select(col("doc_id"), col("text"))
-      else {
-        val acc = spark.read.parquet(verdictsDir)
-          .filter(col("dup_of") === -1L).select(col("doc_id"))
-        corpus.select(col("doc_id"), col("text")).unionByName(
-          spark.read.schema(DocIngest.docSchema).parquet(landingDir)
-            .join(acc, "doc_id").select(col("doc_id"), col("text")))
-      }
-    val (b0, s0) = Dedup.indexOf(seed)
-    var idxBands = b0.withColumn("is_new", lit(false)).localCheckpoint(true)
-    var idxShs = s0.withColumn("is_new", lit(false)).localCheckpoint(true)
+    var idx = DocIngest.seedIndex(spark, corpus, landingDir, verdictsDir)
     var shardState: Option[Map[Long, ShardIngest.GrainTail]] = None
-
-    val reader = spark.readStream.schema(DocIngest.docSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$verdictsDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // 1) quality gates, then the dedup verdict core — the
-        //    DocIngest per-batch body over the gated stream
-        val g = gated(batch).localCheckpoint(true)
-        val (bb, bs) = Dedup.indexOf(g.select(col("doc_id"), col("text")))
-        val bBands = bb.localCheckpoint(true)
-        val bShs = bs.localCheckpoint(true)
-        val verdicts = Dedup.incrementalVerdicts(
-            idxBands.unionByName(bBands.withColumn("is_new", lit(true))),
-            idxShs.unionByName(bShs.withColumn("is_new", lit(true))))
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint(true)
-        verdicts.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(verdictsDir)
-        val accepted = verdicts.filter(col("dup_of") === -1L)
-          .select(col("doc_id"))
-        idxBands = idxBands.unionByName(
-            bBands.join(accepted, "doc_id").withColumn("is_new", lit(false)))
-          .localCheckpoint(true)
-        idxShs = idxShs.unionByName(
-            bShs.join(accepted, "doc_id").withColumn("is_new", lit(false)))
-          .localCheckpoint(true)
-        // 2) the accepted docs extend the shard layout — the
-        //    ShardIngest per-batch body over this batch's survivors
-        val curated = g.join(accepted, "doc_id")
-          .select(col("doc_id"), col("lang"), col("n_tokens"))
-        if (shardState.isEmpty)
-          ShardIngest.checkOrWriteKnobs(spark, shardsDir)
-        val st0 = shardState.getOrElse(
-          ShardIngest.recoverStateBefore(spark, shardsDir, batchId))
-        val (asn, st) = ShardIngest.assignBatch(spark, st0, curated)
-        asn.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(shardsDir)
-        shardState = Some(st)
-        ()
-      }
-      .start()
+    Ingest.start(spark, DocIngest.docSchema, landingDir, verdictsDir,
+        maxFilesPerTrigger, trigger) { (batch, batchId) =>
+      val g = gated(batch).localCheckpoint(true)
+      val (accepted, next) =
+        DocIngest.dedupBatch(idx, g, batchId, verdictsDir)
+      idx = next
+      val curated = g.join(accepted, "doc_id")
+        .select(col("doc_id"), col("lang"), col("n_tokens"))
+      shardState = Some(ShardIngest.shardBatch(spark, shardState, curated,
+        batchId, shardsDir))
+    }
   }
 }

@@ -5,40 +5,27 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.operators.Dedup
-
 /** Streaming ingest twin of q71 (`Dedup.q71IncrementalDedup`): a
   * landing directory of document batches is continuously checked
   * against the corpus's stored MinHash index — the production shape
   * of dedup-at-ingest, where yesterday's corpus is never re-paired.
   *
   * Each micro-batch runs the SAME verdict core as the oracle-gated
-  * batch query (`Dedup.incrementalVerdicts`): candidate pairs are
-  * (batch × index-bucket) and (batch × earlier-batch-doc), verified
-  * by exact shingle Jaccard. Docs that survive (`dup_of = -1`) have
-  * their band digests and shingle sets APPENDED to the index, so a
-  * later batch duplicating an accepted doc is flagged against it.
+  * batch query (`Dedup.incrementalVerdicts`, through [[MinHashIndex]]):
+  * candidate pairs are (batch × index-bucket) and
+  * (batch × earlier-batch-doc), verified by exact shingle Jaccard.
+  * Docs that survive (`dup_of = -1`) have their band digests and
+  * shingle sets APPENDED to the index, so a later batch duplicating an
+  * accepted doc is flagged against it.
   *
-  * Restart safety (two halves, both required for exactly-once):
-  *  - verdict writes are IDEMPOTENT: each micro-batch overwrites its
-  *    own `batch_id=` partition (dynamic partition overwrite), so a
-  *    batch retried after a crash between "write output" and "commit
-  *    offset" replaces rather than duplicates its rows — the standard
-  *    foreachBatch idempotence recipe;
-  *  - the in-memory index is REBUILT on start from what's durable:
-  *    persisted verdicts identify every previously ACCEPTED doc, whose
-  *    band/shingle signatures are re-derived from the landing files
-  *    (still present — the file source never deletes) and seeded into
-  *    the index alongside the corpus. Docs accepted before a restart
-  *    therefore still veto their later duplicates. Re-deriving is
-  *    deterministic, so a reprocessed uncommitted batch reaches the
-  *    same verdicts it wrote before the crash.
+  * Restart: the [[Ingest]] recipe. The index is reseeded from the
+  * corpus plus the landing rows of every doc the durable verdicts
+  * accepted, so docs accepted before a restart still veto their later
+  * duplicates.
   *
   * Scale posture: per-batch cost is O(|batch|) signature computation
-  * plus a band equi-join probing only the batch's buckets; the index
-  * side is localCheckpoint-truncated after every append so lineage
-  * (and recompute risk) never grows with batch count. At 100 TB the
-  * index lives in storage (bucketed by band) rather than executor
+  * plus a band equi-join probing only the batch's buckets. At 100 TB
+  * the index lives in storage (bucketed by band) rather than executor
   * memory — the restart rebuild becomes a plain read of that artifact
   * — and the append is a partitioned write; same plan below the band
   * join either way.
@@ -54,86 +41,40 @@ object DocIngest {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  /** The verdict index after a restart: `corpus` plus the landing docs
+    * the durable verdicts of `outDir` accepted. */
+  private[streaming] def seedIndex(spark: SparkSession, corpus: DataFrame,
+      landingDir: String, outDir: String): MinHashIndex =
+    MinHashIndex.of(Ingest.withAccepted(spark,
+      corpus.select(col("doc_id"), col("text")),
+      spark.read.schema(docSchema).parquet(landingDir), outDir, "doc_id"))
+
+  /** One micro-batch of dedup: writes the verdicts of `batch`'s
+    * `(doc_id, text)` to its `batch_id=` partition of `outDir` and
+    * returns the accepted ids and the index with their signatures
+    * appended. */
+  private[streaming] def dedupBatch(idx: MinHashIndex, batch: DataFrame,
+      batchId: Long, outDir: String): (DataFrame, MinHashIndex) = {
+    val (v, sigs) = idx.probe(batch.select(col("doc_id"), col("text")))
+    val verdicts = v.localCheckpoint(true)
+    Ingest.writeBatch(verdicts, batchId, outDir)
+    val accepted = verdicts.filter(col("dup_of") === -1L)
+      .select(col("doc_id"))
+    (accepted, idx.append(sigs.only(accepted)))
+  }
+
   /** Start the ingest-dedup stream: verdict rows
-    * `(doc_id, dup_of, n_matches, batch_id)` are appended to
-    * `outDir` as parquet; the stream checkpoint lives under
-    * `outDir/_checkpoint` (underscore-prefixed, so batch reads of
-    * `outDir` ignore it).
-    *
-    * `maxFilesPerTrigger` bounds micro-batch size (production knob
-    * for ingest latency vs per-batch overhead; the spec uses 1 to
-    * force cross-batch index evolution). */
+    * `(doc_id, dup_of, n_matches, batch_id)` are written to `outDir`
+    * as parquet. The spec uses `maxFilesPerTrigger = 1` to force
+    * cross-batch index evolution. */
   def incrementalDedup(spark: SparkSession, corpus: DataFrame,
       landingDir: String, outDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // restart recovery: previously-persisted verdicts name the docs
-    // earlier batches ACCEPTED; re-derive their signatures from the
-    // landing files and seed them into the index with the corpus.
-    // "No verdicts yet" is an explicit filesystem check (batch_id=
-    // partitions absent), NOT a catch-all — a corrupt/unreadable
-    // verdict store must raise rather than silently reset the index
-    // (later batches would stop being checked against docs the
-    // durable verdicts already accepted). A replayed batch's own
-    // durable rows are harmless here, unlike ShardIngest's tails:
-    // verdict candidates are DISTINCT (new_id, partner_id) pairs with
-    // self-pairs excluded, so a double-seeded doc changes no verdict.
-    val vPath = new org.apache.hadoop.fs.Path(outDir)
-    val vFs = vPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasVerdicts = vFs.exists(vPath) && vFs.listStatus(vPath)
-      .exists(_.getPath.getName.startsWith("batch_id="))
-    val priorAccepted: Option[DataFrame] =
-      if (!hasVerdicts) None
-      else {
-        val v = spark.read.parquet(outDir)
-          .filter(col("dup_of") === -1L).select(col("doc_id"))
-        if (v.isEmpty) None else Some(v)
-      }
-    val seed = priorAccepted match {
-      case Some(acc) =>
-        corpus.select(col("doc_id"), col("text")).unionByName(
-          spark.read.schema(docSchema).parquet(landingDir)
-            .join(acc, "doc_id").select(col("doc_id"), col("text")))
-      case None => corpus
+    var idx = seedIndex(spark, corpus, landingDir, outDir)
+    Ingest.start(spark, docSchema, landingDir, outDir, maxFilesPerTrigger,
+        trigger) { (batch, batchId) =>
+      idx = dedupBatch(idx, batch, batchId, outDir)._2
     }
-    val (b0, s0) = Dedup.indexOf(seed)
-    // the mutable index state threaded across micro-batches; eager
-    // localCheckpoint = the in-session stand-in for the persisted
-    // index artifact
-    var idxBands = b0.withColumn("is_new", lit(false)).localCheckpoint(true)
-    var idxShs = s0.withColumn("is_new", lit(false)).localCheckpoint(true)
-
-    val reader = spark.readStream.schema(docSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (bb, bs) = Dedup.indexOf(batch.select(col("doc_id"), col("text")))
-        val bBands = bb.localCheckpoint(true)
-        val bShs = bs.localCheckpoint(true)
-        val verdicts = Dedup.incrementalVerdicts(
-            idxBands.unionByName(bBands.withColumn("is_new", lit(true))),
-            idxShs.unionByName(bShs.withColumn("is_new", lit(true))))
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint(true)
-        // idempotent under micro-batch retry: a replayed batch_id
-        // OVERWRITES its own partition instead of appending a duplicate
-        verdicts.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        val accepted = verdicts.filter(col("dup_of") === -1L)
-          .select(col("doc_id"))
-        idxBands = idxBands.unionByName(
-            bBands.join(accepted, "doc_id").withColumn("is_new", lit(false)))
-          .localCheckpoint(true)
-        idxShs = idxShs.unionByName(
-            bShs.join(accepted, "doc_id").withColumn("is_new", lit(false)))
-          .localCheckpoint(true)
-        ()
-      }
-      .start()
   }
 }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Dedup
 
 /** Streaming ingest twin of q177 (`Dedup.q177ParaDedup`) — paragraph
-  * dedup at ingest, the grain the round-13 verdict asked the ingest
-  * chain to carry (#5): documents land in batches, each batch's
+  * dedup at ingest: documents land in batches, each batch's
   * 16-token paragraph chunks are checked exact-first then banded
   * against the evolving PARAGRAPH index, and every paragraph gets a
   * durable verdict row `(doc_id, pidx, pid, status ∈
@@ -36,22 +35,20 @@ import graft.operators.Dedup
   *     `exact` drop. Strict `<` makes replay idempotent: a replayed
   *     batch's own seeded entry has keep = pid and never drops its
   *     origin.
-  *  2. NEAR: exact survivors run the [[DocIngest]] verdict core at
-  *     paragraph grain with `strictOrder = true`. The near index
+  *  2. NEAR: exact survivors probe the near [[MinHashIndex]] (the
+  *     [[DocIngest]] verdict core) at paragraph grain with
+  *     `strictOrder = true`. The near index
   *     deliberately holds ALL prior exact survivors — kept AND
   *     near-dropped — because q177's drop rule compares each pid
   *     against every smaller-pid exact survivor, not only accepted
   *     ones (a doc-grain index keeps accepted only; the difference
   *     is the batch operator's global-pair semantics).
   *
-  * Restart safety (the DocIngest recipe at paragraph grain): verdict
-  * writes are idempotent per batch (dynamic partition overwrite);
-  * on start, the durable verdicts name every processed doc, whose
-  * paragraphs are re-derived from the landing files — the exact
-  * index is min(pid) per hash over ALL of them, the near index the
-  * signatures of the non-exact-dropped ones. An absent/partition-
-  * free output dir is an explicit fresh-start check; read errors
-  * over existing data propagate rather than silently resetting.
+  * Restart: the [[Ingest]] recipe at paragraph grain. The durable
+  * verdicts name every processed doc, whose paragraphs are re-derived
+  * from the landing files: the exact index is min(pid) per hash over
+  * ALL of them, the near index the signatures of the ones not
+  * exact-dropped.
   *
   * Scale posture: per batch — map-side chunking (ids + 16-token
   * strings), one hash-keyed anti-join probe of the exact index, the
@@ -64,108 +61,64 @@ object ParaIngest {
 
   /** Start the paragraph-dedup ingest stream over a landing
     * directory of document parquet batches (the [[DocIngest]]
-    * schema); verdict rows append to `outDir`. */
+    * schema); verdict rows are written to `outDir`. */
   def incrementalParaDedup(spark: SparkSession, landingDir: String,
       outDir: String, maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
-    val vPath = new org.apache.hadoop.fs.Path(outDir)
-    val vFs = vPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasVerdicts = vFs.exists(vPath) && vFs.listStatus(vPath)
-      .exists(_.getPath.getName.startsWith("batch_id="))
+    val prior = Ingest.durable(spark, outDir)
+    val paras = Dedup.paragraphsOf(prior.fold(
+        Seq.empty[(Long, String)].toDF("doc_id", "text")) { v =>
+      spark.read.schema(DocIngest.docSchema).parquet(landingDir)
+        .join(v.select(col("doc_id")).distinct(), "doc_id")
+        .select(col("doc_id"), col("text"))
+    })
+    var exIdx = paras.select(col("pid"), md5(col("ptext")).as("h"))
+      .groupBy(col("h")).agg(min(col("pid")).as("keep"))
+      .localCheckpoint(true)
+    val surv = prior.fold(paras)(v => paras.join(
+      v.filter(col("status") =!= "exact").select(col("pid")),
+      Seq("pid"), "left_semi"))
+    var nearIdx = MinHashIndex.of(
+      surv.select(col("pid").as("doc_id"), col("ptext").as("text")))
 
-    var (exIdx, idxBands, idxShs) =
-      if (!hasVerdicts) {
-        val none = Dedup.paragraphsOf(
-          Seq.empty[(Long, String)].toDF("doc_id", "text"))
-        val ex = none.select(col("pid"), md5(col("ptext")).as("h"))
-          .groupBy(col("h")).agg(min(col("pid")).as("keep"))
-        val (b0, s0) = Dedup.indexOf(
-          none.select(col("pid").as("doc_id"), col("ptext").as("text")))
-        (ex, b0.withColumn("is_new", lit(false)),
-          s0.withColumn("is_new", lit(false)))
-      } else {
-        val v = spark.read.parquet(outDir)
-        val processed = v.select(col("doc_id")).distinct()
-        val docs = spark.read.schema(DocIngest.docSchema)
-          .parquet(landingDir)
-          .join(processed, "doc_id")
-          .select(col("doc_id"), col("text"))
-        val paras = Dedup.paragraphsOf(docs)
-        val ex = paras.select(col("pid"), md5(col("ptext")).as("h"))
-          .groupBy(col("h")).agg(min(col("pid")).as("keep"))
-        val surv = paras.join(
-          v.filter(col("status") =!= "exact").select(col("pid")),
-          Seq("pid"), "left_semi")
-        val (b0, s0) = Dedup.indexOf(
-          surv.select(col("pid").as("doc_id"), col("ptext").as("text")))
-        (ex, b0.withColumn("is_new", lit(false)),
-          s0.withColumn("is_new", lit(false)))
-      }
-    exIdx = exIdx.localCheckpoint(true)
-    idxBands = idxBands.localCheckpoint(true)
-    idxShs = idxShs.localCheckpoint(true)
-
-    val reader = spark.readStream.schema(DocIngest.docSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val withH = Dedup.paragraphsOf(
-            batch.select(col("doc_id"), col("text")))
-          .withColumn("h", md5(col("ptext")))
-          .localCheckpoint(true)
-        val bmin = withH.groupBy(col("h")).agg(min(col("pid")).as("bmin"))
-        val exMarked = withH
-          .join(bmin, "h")
-          .join(exIdx, Seq("h"), "left")
-          .withColumn("ex_drop",
-            (col("keep").isNotNull && col("keep") < col("pid")) ||
-              col("bmin") < col("pid"))
-          .localCheckpoint(true)
-        val exSurv = exMarked.filter(!col("ex_drop"))
-        val (bb, bs) = Dedup.indexOf(
-          exSurv.select(col("pid").as("doc_id"), col("ptext").as("text")))
-        val bBands = bb.localCheckpoint(true)
-        val bShs = bs.localCheckpoint(true)
-        val near = Dedup.incrementalVerdicts(
-            idxBands.unionByName(bBands.withColumn("is_new", lit(true))),
-            idxShs.unionByName(bShs.withColumn("is_new", lit(true))),
-            strictOrder = true)
-          .select(col("doc_id").as("pid"), col("dup_of"))
-        val verdicts = exMarked
-          .join(near, Seq("pid"), "left")
-          .select(col("doc_id"), col("pidx"), col("pid"),
-            when(col("ex_drop"), lit("exact"))
-              .when(col("dup_of") =!= -1L, lit("near"))
-              .otherwise(lit("kept")).as("status"),
-            when(col("ex_drop"), least(col("keep"), col("bmin")))
-              .when(col("dup_of") =!= -1L, col("dup_of"))
-              .otherwise(lit(-1L)).as("partner_pid"))
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint(true)
-        verdicts.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        // advance: exact index appends only hashes it has never
-        // seen (their in-batch min pid is the durable keeper); the
-        // near index appends ALL batch exact survivors — see the
-        // object scaladoc for why near-dropped ones stay in
-        exIdx = exIdx.unionByName(
-            bmin.join(exIdx, Seq("h"), "left_anti")
-              .select(col("h"), col("bmin").as("keep")))
-          .localCheckpoint(true)
-        idxBands = idxBands.unionByName(
-            bBands.withColumn("is_new", lit(false)))
-          .localCheckpoint(true)
-        idxShs = idxShs.unionByName(
-            bShs.withColumn("is_new", lit(false)))
-          .localCheckpoint(true)
-        ()
-      }
-      .start()
+    Ingest.start(spark, DocIngest.docSchema, landingDir, outDir,
+        maxFilesPerTrigger, trigger) { (batch, batchId) =>
+      val withH = Dedup.paragraphsOf(
+          batch.select(col("doc_id"), col("text")))
+        .withColumn("h", md5(col("ptext")))
+        .localCheckpoint(true)
+      val bmin = withH.groupBy(col("h")).agg(min(col("pid")).as("bmin"))
+      val exMarked = withH
+        .join(bmin, "h")
+        .join(exIdx, Seq("h"), "left")
+        .withColumn("ex_drop",
+          (col("keep").isNotNull && col("keep") < col("pid")) ||
+            col("bmin") < col("pid"))
+        .localCheckpoint(true)
+      val (near, sigs) = nearIdx.probe(exMarked.filter(!col("ex_drop"))
+          .select(col("pid").as("doc_id"), col("ptext").as("text")),
+        strictOrder = true)
+      val verdicts = exMarked
+        .join(near.select(col("doc_id").as("pid"), col("dup_of")),
+          Seq("pid"), "left")
+        .select(col("doc_id"), col("pidx"), col("pid"),
+          when(col("ex_drop"), lit("exact"))
+            .when(col("dup_of") =!= -1L, lit("near"))
+            .otherwise(lit("kept")).as("status"),
+          when(col("ex_drop"), least(col("keep"), col("bmin")))
+            .when(col("dup_of") =!= -1L, col("dup_of"))
+            .otherwise(lit(-1L)).as("partner_pid"))
+      Ingest.writeBatch(verdicts, batchId, outDir)
+      // advance: exact index appends only hashes it has never
+      // seen (their in-batch min pid is the durable keeper); the
+      // near index appends ALL batch exact survivors — see the
+      // object scaladoc for why near-dropped ones stay in
+      exIdx = exIdx.unionByName(
+          bmin.join(exIdx, Seq("h"), "left_anti")
+            .select(col("h"), col("bmin").as("keep")))
+        .localCheckpoint(true)
+      nearIdx = nearIdx.append(sigs)
+    }
   }
 }

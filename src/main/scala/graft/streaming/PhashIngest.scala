@@ -25,10 +25,9 @@ import graft.operators.Multimodal
   * duplicate of a rejected image is charged to the rejected image's
   * own canonical, not to the reject.
   *
-  * Restart safety (the DocIngest recipe): verdict writes are
-  * idempotent — each micro-batch overwrites its own `batch_id=`
-  * partition — and the index is rebuilt on start from the durable
-  * verdicts (accepted ids) re-hashed from the landing files.
+  * Restart: the [[Ingest]] recipe. The index is reseeded from the
+  * corpus plus the landing files of every image the durable verdicts
+  * accepted, re-hashed.
   *
   * Scale posture: per-batch cost is O(|batch|) decode+hash plus a
   * band join touching only the batch's buckets; only 8-byte hashes
@@ -82,55 +81,26 @@ object PhashIngest {
   }
 
   /** Start the phash ingest-dedup stream: verdict rows
-    * `(img_id, dup_of, n_matches, batch_id)` are appended to
+    * `(img_id, dup_of, n_matches, batch_id)` are written to
     * `outDir` as parquet; `corpus` is the already-ingested
     * (img_id, payload) set seeding the index. */
   def incrementalPhashDedup(spark: SparkSession, corpus: DataFrame,
       landingDir: String, outDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // restart recovery: re-hash the landing files of previously
-    // ACCEPTED images and seed them into the index with the corpus
-    val priorAccepted: Option[DataFrame] =
-      try {
-        val v = spark.read.parquet(outDir)
-          .filter(col("dup_of") === -1L).select(col("img_id"))
-        if (v.isEmpty) None else Some(v)
-      } catch { case _: Exception => None } // no verdicts yet
-    val seed = priorAccepted match {
-      case Some(acc) =>
-        corpus.unionByName(
-          spark.read.schema(imgSchema).parquet(landingDir)
-            .join(acc, "img_id")
-            .select(col("img_id"), col("payload")))
-      case None => corpus
+    var idx = Multimodal.phashOf(Ingest.withAccepted(spark, corpus,
+        spark.read.schema(imgSchema).parquet(landingDir), outDir, "img_id"))
+      .localCheckpoint(true)
+    Ingest.start(spark, imgSchema, landingDir, outDir, maxFilesPerTrigger,
+        trigger) { (batch, batchId) =>
+      val bh = Multimodal.phashOf(
+        batch.select(col("img_id"), col("payload"))).localCheckpoint(true)
+      val verdicts = phashVerdicts(idx, bh).localCheckpoint(true)
+      Ingest.writeBatch(verdicts, batchId, outDir)
+      val accepted = verdicts.filter(col("dup_of") === -1L)
+        .select(col("img_id"))
+      idx = idx.unionByName(bh.join(accepted, "img_id"))
+        .localCheckpoint(true)
     }
-    var idx = Multimodal.phashOf(seed).localCheckpoint(true)
-
-    val reader = spark.readStream.schema(imgSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val bh = Multimodal.phashOf(
-          batch.select(col("img_id"), col("payload"))).localCheckpoint(true)
-        val verdicts = phashVerdicts(idx, bh)
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint(true)
-        // idempotent under micro-batch retry: a replayed batch_id
-        // OVERWRITES its own partition
-        verdicts.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        val accepted = verdicts.filter(col("dup_of") === -1L)
-          .select(col("img_id"))
-        idx = idx.unionByName(bh.join(accepted, "img_id"))
-          .localCheckpoint(true)
-        ()
-      }
-      .start()
   }
 }

@@ -32,21 +32,14 @@ import graft.operators.Shards
   * positions contiguous per shard, offsets the member-token prefix
   * sums, shards size-bounded by budget + one overflow doc.
   *
-  * Restart safety (the PhashIngest recipe, hardened): assignment
-  * writes are idempotent (each micro-batch overwrites its own
-  * `batch_id=` partition) and the per-grain tail state is rebuilt
+  * Restart: the [[Ingest]] recipe, with the tail state rebuilt
   * INSIDE the first foreachBatch from the durable assignments with
-  * `batch_id < current` ONLY — rebuilding at stream start from all
+  * `batch_id < current` ONLY. Rebuilding at stream start from all
   * durable rows would, after a crash between the parquet write and
   * the checkpoint commit, sum the replayed batch's own rows into the
-  * tails and shift every replayed position/offset (the round-12
-  * advisor finding). Filtering to strictly-earlier batches makes the
-  * replay re-derive exactly the state the crashed run saw, so the
-  * overwrite is bit-identical. A genuinely missing/empty output dir
-  * is detected by an explicit filesystem check; any OTHER read
-  * failure (corrupt footer, transient FS error, permissions)
-  * propagates instead of silently restarting tails at zero against
-  * existing shards.
+  * tails and shift every replayed position/offset. Filtering to
+  * strictly-earlier batches makes the replay re-derive exactly the
+  * state the crashed run saw, so the overwrite is bit-identical.
   *
   * Scale posture: per batch, one window pair on (grain) then
   * (grain, seq) over BATCH-grain rows plus a broadcast join of the
@@ -145,11 +138,11 @@ object ShardIngest {
     * were written under. Recovery decodes (grain, seq) from stored
     * shard_ids with the CURRENT knobs, so a restart under different
     * knobs would silently mis-reconstruct every grain tail and mix
-    * two incompatible shard_id labelings in one output dir (round-13
-    * advisor finding) — the sidecar turns that into a loud mismatch
-    * error instead. Batch q171 re-labels freely (the [[Shards]]
-    * provenance contract is about recomputed-from-scratch layouts);
-    * a STREAMING output dir pins all three knobs for its lifetime. */
+    * two incompatible shard_id labelings in one output dir — the
+    * sidecar turns that into a loud mismatch error instead. Batch
+    * q171 re-labels freely (the [[Shards]] provenance contract is
+    * about recomputed-from-scratch layouts); a STREAMING output dir
+    * pins all three knobs for its lifetime. */
   private def knobsPath(outDir: String) = new Path(outDir, "_shard_knobs")
 
   /** First-batch guard: record the knobs on a fresh output dir,
@@ -209,50 +202,40 @@ object ShardIngest {
     * see it: assignments of STRICTLY EARLIER batches only (a replayed
     * batch's own `batch_id=` partition may already exist — counting
     * it would shift every replayed position, the crash-window bug
-    * this filter closes). Returns empty ONLY when the output dir is
-    * genuinely absent or holds no batch partitions yet; read errors
-    * over existing data propagate (see object scaladoc). */
+    * this filter closes). Empty on a fresh start; read errors over
+    * existing data propagate ([[Ingest.durable]]). */
   private[graft] def recoverStateBefore(spark: SparkSession,
       outDir: String, batchId: Long,
-      buckets: Long = Shards.ShardBuckets): Map[Long, GrainTail] = {
-    val path = new Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasBatches = fs.exists(path) && fs.listStatus(path)
-      .exists(_.getPath.getName.startsWith("batch_id="))
-    if (!hasBatches) Map.empty
-    else recoverState(
-      spark.read.parquet(outDir).filter(col("batch_id") < batchId),
-      buckets)
+      buckets: Long = Shards.ShardBuckets): Map[Long, GrainTail] =
+    Ingest.durable(spark, outDir).fold(Map.empty[Long, GrainTail])(d =>
+      recoverState(d.filter(col("batch_id") < batchId), buckets))
+
+  /** One micro-batch of assignment: on the first batch (`state` empty)
+    * check the knobs and recover the tails, then assign `batch`
+    * `(doc_id, lang, n_tokens)`, write its `batch_id=` partition of
+    * `outDir` and return the advanced tails. */
+  private[streaming] def shardBatch(spark: SparkSession,
+      state: Option[Map[Long, GrainTail]], batch: DataFrame, batchId: Long,
+      outDir: String): Map[Long, GrainTail] = {
+    if (state.isEmpty) checkOrWriteKnobs(spark, outDir)
+    val (asn, st) = assignBatch(spark,
+      state.getOrElse(recoverStateBefore(spark, outDir, batchId)), batch)
+    Ingest.writeBatch(asn, batchId, outDir)
+    st
   }
 
   /** Start the incremental shard-assignment stream over a landing
     * directory of curated-doc parquet batches; assignment rows
-    * (+ batch_id) append to `outDir`. */
+    * (+ batch_id) are written to `outDir`. */
   def incrementalShardLayout(spark: SparkSession, landingDir: String,
       outDir: String, maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // recovery is deferred into the FIRST foreachBatch so the replay
     // filter can exclude the replayed batch's own durable partition
     var state: Option[Map[Long, GrainTail]] = None
-    val reader = spark.readStream.schema(docSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (state.isEmpty) checkOrWriteKnobs(spark, outDir)
-        val st0 = state.getOrElse(
-          recoverStateBefore(spark, outDir, batchId))
-        val (asn, st) = assignBatch(spark, st0, batch)
-        asn.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        state = Some(st)
-        ()
-      }
-      .start()
+    Ingest.start(spark, docSchema, landingDir, outDir, maxFilesPerTrigger,
+        trigger) { (batch, batchId) =>
+      state = Some(shardBatch(spark, state, batch, batchId, outDir))
+    }
   }
 }

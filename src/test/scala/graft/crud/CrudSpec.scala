@@ -93,12 +93,6 @@ class CrudSpec extends AnyFunSuite {
     goldenCycle(freshEngine())
   }
 
-  test("golden cycle on the JSONL backend — the SPI is format-agnostic") {
-    val dir = Files.createTempDirectory("graft-store-jsonl").toString
-    goldenCycle(new CrudEngine(spark,
-      new graft.storage.JsonlBackend(spark, dir, buckets = 4)))
-  }
-
   private def goldenCycle(e: CrudEngine): Unit = {
     val created = e.createOne(movie,
       """{"id":5,"name":"Heat","recommended":true}""")
@@ -207,6 +201,22 @@ class CrudSpec extends AnyFunSuite {
           "year" -> TrueValue.Prim(PrimValue.IntVal(1234L))): Records.Record,
         constrained)), constrained.schema)
     assert(e.bulkLoad(constrained, bad).isLeft)
+
+    // lengths count code points on both paths: 6 emoji are 12 UTF-16
+    // units but fit max_length 10; 11 emoji do not
+    val emoji6 = "\uD83D\uDE00" * 6
+    val emoji11 = "\uD83D\uDE00" * 11
+    assert(e.createOne(constrained,
+      s"""{"id":5,"name":"$emoji6"}""").isRight)
+    assert(e.createOne(constrained,
+      s"""{"id":6,"name":"$emoji11"}""").isLeft)
+    def named(name: String) = spark.createDataFrame(
+      java.util.List.of(Records.toRow(
+        Map("id" -> TrueValue.Prim(PrimValue.IntVal(7L)),
+          "name" -> TrueValue.Prim(PrimValue.StrVal(name))): Records.Record,
+        constrained)), constrained.schema)
+    assert(e.bulkLoad(constrained, named(emoji6)).isRight)
+    assert(e.bulkLoad(constrained, named(emoji11)).isLeft)
   }
 
   test("typed pk keys: Integer, String, Boolean models in one gus file") {

@@ -91,4 +91,34 @@ class PhashIngestSpec extends AnyFunSuite {
       (8L, -1L, 0L)), // unrelated, accepted
       s"unexpected verdicts: $got")
   }
+
+  test("restart rebuilds the index: images accepted before a restart " +
+      "still veto their later duplicates") {
+    // 3 is a pixel-exact re-encode of 1 (ham(1,3)=0); 8 is unrelated
+    assert(ham(1, 3) == 0)
+    val landing = Files.createTempDirectory("phash-landing3").toString
+    val out = Files.createTempDirectory("phash-verdicts3").toString
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      PhashIngest.imgSchema)
+    // run 1: image 1 is accepted, then the stream STOPS (process death)
+    payloadDf(Seq(1L)).coalesce(1)
+      .write.mode("overwrite").parquet(s"$landing/b1")
+    PhashIngest.incrementalPhashDedup(spark, empty, s"$landing/*", out)
+      .awaitTermination(120000)
+    Thread.sleep(1200) // distinct mtimes => deterministic file order
+    // run 2: a FRESH stream over the same checkpoint sees only b2;
+    // image 3 duplicates the image accepted in run 1, which is absent
+    // from this process's memory — only the rebuilt index can flag it
+    payloadDf(Seq(3L, 8L)).coalesce(1)
+      .write.mode("overwrite").parquet(s"$landing/b2")
+    PhashIngest.incrementalPhashDedup(spark, empty, s"$landing/*", out)
+      .awaitTermination(120000)
+    val got = verdictSet(out)
+    assert(got == Set(
+      (1L, -1L, 0L),  // accepted in run 1, written exactly once
+      (3L, 1L, 1L),   // flagged against the pre-restart accepted image
+      (8L, -1L, 0L)), // unrelated, accepted
+      s"unexpected verdicts after restart: $got")
+  }
 }
