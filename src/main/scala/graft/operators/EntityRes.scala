@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.codec.digest.DigestUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Tables
 
@@ -257,41 +261,42 @@ object EntityRes {
   private val ErRecallCore = "recall calibration far apart pair anchor"
   private val ErRecallCore2 = "nearby duplicate twin middle zone text"
 
-  /** One planted block under `nationId`: `nFillers` mutually
-    * dissimilar md5-hex names plus a far endpoint pair (first/last
-    * in name order — MISSED by the W-window) and an adjacent near
-    * pair (FOUND). */
-  private def probeBlockOf(s: SparkSession, nationId: Long,
+  /** One planted block under `nation`: `nFillers` mutually
+    * dissimilar md5-hex names (ck = `fillerBase` − i, name = md5 hex of
+    * `fillerTag` ++ i) plus a far endpoint pair (first/last in name
+    * order — MISSED by the W-window) and an adjacent near pair
+    * (FOUND). */
+  private[operators] final case class ProbeBlock(nation: Long,
       fillerBase: Long, nFillers: Int, fillerTag: String,
-      endpoints: Seq[(Long, String)]): DataFrame = {
-    import s.implicits._
-    val fillers = s.range(nFillers.toLong)
-      .select((lit(fillerBase) - col("id")).as("ck"),
-        md5(concat(lit(fillerTag), col("id").cast("string"))).as("nm"))
-    fillers.unionByName(endpoints.toDF("ck", "nm"))
-      .select(lit(nationId).as("nation"), lit(0L).as("bal_bucket"),
-        col("ck"), lower(col("nm")).as("nm"),
-        trigrams(col("nm")).as("g"))
-      .withColumn("ng", size(col("g")).cast("long"))
-  }
+      endpoints: Seq[(Long, String)])
 
-  private def probeBlock(s: SparkSession): DataFrame =
-    probeBlockOf(s, -1L, -2000000L, ErRecallFillers, "errecall", Seq(
+  private[operators] val ProbeBlocks: Seq[ProbeBlock] = Seq(
+    ProbeBlock(-1L, -2000000L, ErRecallFillers, "errecall", Seq(
       (-1000001L, s"0 $ErRecallCore"), (-1000002L, s"zz $ErRecallCore"),
       (-1000003L, s"g0 $ErRecallCore2"),
-      (-1000004L, s"g1 $ErRecallCore2")))
-      .unionByName(
-        // the >TruthCap block: endpoint ids chosen (offline, md5 of
-        // the decimal string) so all four survive the mod-2 member
-        // sample the block's size forces
-        probeBlockOf(s, -2L, -4000000L, ErRecallBigFillers,
-          "errecallbig", Seq(
-            (-3000001L, s"0 $ErRecallCore"),
-            (-3000002L, s"zz $ErRecallCore"),
-            (-3000003L, s"g0 $ErRecallCore2"),
-            (-3000007L, s"g1 $ErRecallCore2"))))
-      // ~1.1k planted rows: one partition, not a task per range slice
-      .coalesce(1)
+      (-1000004L, s"g1 $ErRecallCore2"))),
+    // the >TruthCap block: endpoint ids chosen (offline, md5 of the
+    // decimal string) so all four survive the mod-2 member sample the
+    // block's size forces
+    ProbeBlock(-2L, -4000000L, ErRecallBigFillers, "errecallbig", Seq(
+      (-3000001L, s"0 $ErRecallCore"), (-3000002L, s"zz $ErRecallCore"),
+      (-3000003L, s"g0 $ErRecallCore2"),
+      (-3000007L, s"g1 $ErRecallCore2"))))
+
+  private val probeSchema = StructType(Seq("nation", "bal_bucket", "ck")
+    .map(StructField(_, LongType, nullable = false)) :+
+    StructField("nm", StringType, nullable = false))
+
+  /** The planted rows (nation, bal_bucket, ck, nm), a driver-side
+    * constant: `nm` needs no `lower` — md5 hex is lowercase, and so
+    * are the ASCII endpoint names (EntityResSpec checks both against
+    * Spark's `lower(md5(...))`). */
+  private[operators] lazy val probeRows: Seq[Row] =
+    ProbeBlocks.flatMap { b =>
+      ((0 until b.nFillers).map(i =>
+        (b.fillerBase - i, DigestUtils.md5Hex(b.fillerTag + i))) ++
+        b.endpoints).map { case (ck, nm) => Row(b.nation, 0L, ck, nm) }
+    }
 
   /** q176: recall cost of the q101 block cap — the q153/q131
     * calibration treatment applied to the ER pillar. q101's
@@ -356,9 +361,12 @@ object EntityRes {
     // rides the block-grain stream now: max(bn)/max(m) over capped
     // blocks are block-grain quantities, bit-identical to the old
     // member-grain maxima.
-    val bnT = real.unionByName(
-        probeBlock(s).select(col("nation"), col("bal_bucket"),
-          col("ck"), col("nm")))
+    // the planted rows as a LocalRelation (explicit schema, no
+    // encoder), unioned once for both consumers; ~1.1k rows: one
+    // partition, not a task per core
+    val members = real.unionByName(
+      s.createDataFrame(probeRows.asJava, probeSchema).coalesce(1))
+    val bnT = members
       .groupBy(col("nation"), col("bal_bucket"))
       .agg(count(lit(1)).as("bn"))
       .filter(col("bn") > BlockCap)
@@ -372,9 +380,7 @@ object EntityRes {
           % ErRecallSampleMod === 0)
     val ord = Window.partitionBy(col("nation"), col("bal_bucket"))
       .orderBy(col("nm"), col("ck"))
-    val elig = real.unionByName(
-        probeBlock(s).select(col("nation"), col("bal_bucket"),
-          col("ck"), col("nm")))
+    val elig = members
       .join(broadcast(bnT), Seq("nation", "bal_bucket"))
       // rank over the FULL block membership (the found-arm rule uses
       // q101's ranks, computed before any member sampling)

@@ -232,7 +232,7 @@ final class ChangeLog(spark: SparkSession, dir: String,
 
   /** Streaming view of one model's changes. */
   def subscribe(m: ModelDefinition): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
+    Ingest.fileStream(spark, schema, dir, None)
       .filter(col("model") === m.modelName.pluralCamel)
 
   /** Batch view (for catch-up reads). */

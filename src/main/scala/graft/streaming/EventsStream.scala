@@ -57,13 +57,9 @@ object EventsStream {
     * `maxFilesPerTrigger` is a READER option, threaded here so specs
     * can force cross-micro-batch state merging. */
   def readStream(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r0 = spark.readStream
-      .schema(eventsSchema(tsPhysicalType(spark, dir)))
-    val reader = maxFilesPerTrigger.fold(r0)(n =>
-      r0.option("maxFilesPerTrigger", n.toString))
-    toNanos(reader.parquet(dir))
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    toNanos(Ingest.fileStream(spark,
+      eventsSchema(tsPhysicalType(spark, dir)), dir, maxFilesPerTrigger))
 
   /** Batch twin of [[readStream]] (spec cross-checks read through
     * this so stream and batch agree on the ts unit). */

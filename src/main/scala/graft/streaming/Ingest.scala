@@ -13,7 +13,8 @@ import graft.operators.Dedup
   * [[ShardIngest]]) runs, kept in one place.
   *
   * A twin reads a landing directory of parquet files as a file
-  * stream and writes one durable output directory, partitioned by
+  * stream ([[fileStream]], which every other streaming twin reads
+  * through too) and writes one durable output directory, partitioned by
   * `batch_id`. Its stream checkpoint lives under `outDir/_checkpoint`
   * (underscore-prefixed, so batch reads of `outDir` skip it).
   *
@@ -68,22 +69,28 @@ private[streaming] object Ingest {
       .partitionBy("batch_id")
       .parquet(outDir)
 
-  /** Start the file stream over `landingDir` (parquet, `schema`) and
-    * run `body` on every micro-batch with its batch id.
-    * `maxFilesPerTrigger` bounds micro-batch size: ingest latency
-    * against per-batch overhead. */
-  def start(spark: SparkSession, schema: StructType, landingDir: String,
-      outDir: String, maxFilesPerTrigger: Option[Int], trigger: Trigger)(
-      body: (DataFrame, Long) => Unit): StreamingQuery = {
+  /** The unstarted file stream over `landingDir` (parquet, `schema`),
+    * the reader of every streaming twin. `maxFilesPerTrigger` bounds
+    * micro-batch size: ingest latency against per-batch overhead
+    * (specs set it to force state across micro-batches). */
+  def fileStream(spark: SparkSession, schema: StructType,
+      landingDir: String, maxFilesPerTrigger: Option[Int]): DataFrame = {
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.parquet(landingDir)
+  }
+
+  /** Start [[fileStream]] over `landingDir` and run `body` on every
+    * micro-batch with its batch id. */
+  def start(spark: SparkSession, schema: StructType, landingDir: String,
+      outDir: String, maxFilesPerTrigger: Option[Int], trigger: Trigger)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    fileStream(spark, schema, landingDir, maxFilesPerTrigger)
       .writeStream
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .trigger(trigger)
       .foreachBatch(body)
       .start()
-  }
 }
 
 /** A MinHash index over `(doc_id, text)` rows: the band digests

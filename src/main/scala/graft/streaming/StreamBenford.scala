@@ -46,13 +46,10 @@ object StreamBenford {
     * unstarted streaming DataFrame of (digit, observed); callers
     * pick sink/trigger/output mode (`complete`). */
   def countsStream(spark: SparkSession, landingDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(landingDir).schema
-    val r0 = spark.readStream.schema(schema)
-    val reader = maxFilesPerTrigger.fold(r0)(n =>
-      r0.option("maxFilesPerTrigger", n.toString))
-    digitCounts(reader.parquet(landingDir))
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    digitCounts(Ingest.fileStream(spark,
+      spark.read.parquet(landingDir).schema, landingDir,
+      maxFilesPerTrigger))
 
   /** The q115 report over a digit histogram: (digit, observed, n,
     * obs_ppm, exp_ppm, dev_ppm) for every digit PRESENT, sorted —

@@ -49,12 +49,9 @@ object StreamDrift {
     * histogram). `maxFilesPerTrigger` is a READER option, threaded
     * here so specs can force cross-micro-batch state merging. */
   def histStream(spark: SparkSession, landingDir: String, lo: Long,
-      hi: Long, maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r0 = spark.readStream.schema(DocIngest.docSchema)
-    val reader = maxFilesPerTrigger.fold(r0)(n =>
-      r0.option("maxFilesPerTrigger", n.toString))
-    lengthHist(reader.parquet(landingDir), lo, hi)
-  }
+      hi: Long, maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    lengthHist(Ingest.fileStream(spark, DocIngest.docSchema, landingDir,
+      maxFilesPerTrigger), lo, hi)
 
   /** Exact drift statistics between two bucket histograms (any
     * subset of 0..B−1 present): (ks_ppm, l1_ppm). Pure integer — KS

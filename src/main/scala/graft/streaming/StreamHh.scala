@@ -61,10 +61,8 @@ object StreamHh {
   def candidateStream(spark: SparkSession, landingDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val r0 = spark.readStream.schema(DocIngest.docSchema)
-    val reader = maxFilesPerTrigger.fold(r0)(n =>
-      r0.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(landingDir)
+    Ingest.fileStream(spark, DocIngest.docSchema, landingDir,
+      maxFilesPerTrigger)
       .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
       .as[String]
       .groupByKey(t => math.floorMod(t.hashCode, Shards))

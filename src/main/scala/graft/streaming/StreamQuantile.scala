@@ -50,12 +50,9 @@ object StreamQuantile {
     * mode (`complete`). `maxFilesPerTrigger` threaded so specs can
     * force cross-micro-batch state merging. */
   def histStream(spark: SparkSession, landingDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r0 = spark.readStream.schema(DocIngest.docSchema)
-    val reader = maxFilesPerTrigger.fold(r0)(n =>
-      r0.option("maxFilesPerTrigger", n.toString))
-    log2Hist(reader.parquet(landingDir))
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    log2Hist(Ingest.fileStream(spark, DocIngest.docSchema, landingDir,
+      maxFilesPerTrigger))
 
   /** Exact q100 rank rule over a folded histogram: for each q_pct in
     * `qs`, (q_pct, n, bucket, lo, hi) — the first bucket whose

@@ -33,7 +33,8 @@ object StreamSketch {
     * triggers). */
   def cmsStream(spark: SparkSession, landingDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    Sketch.tokenSketch(landingStream(spark, landingDir, maxFilesPerTrigger))
+    Sketch.tokenSketch(Ingest.fileStream(spark, DocIngest.docSchema,
+      landingDir, maxFilesPerTrigger))
 
   /** The streaming HyperLogLog over the same landing directory — the
     * q94 register table as a continuous query: ≤ 256 rows of state
@@ -43,12 +44,6 @@ object StreamSketch {
     * over the emitted table. */
   def hllStream(spark: SparkSession, landingDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    Sketch.tokenHll(landingStream(spark, landingDir, maxFilesPerTrigger))
-
-  private def landingStream(spark: SparkSession, landingDir: String,
-      maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val r0 = spark.readStream.schema(DocIngest.docSchema)
-    maxFilesPerTrigger.fold(r0)(n =>
-      r0.option("maxFilesPerTrigger", n.toString)).parquet(landingDir)
-  }
+    Sketch.tokenHll(Ingest.fileStream(spark, DocIngest.docSchema,
+      landingDir, maxFilesPerTrigger))
 }

@@ -50,13 +50,10 @@ object StreamSrm {
     * threaded here so specs can force cross-micro-batch state
     * merging. */
   def countsStream(spark: SparkSession, landingDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(landingDir).schema
-    val r0 = spark.readStream.schema(schema)
-    val reader = maxFilesPerTrigger.fold(r0)(n =>
-      r0.option("maxFilesPerTrigger", n.toString))
-    armCounts(reader.parquet(landingDir))
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    armCounts(Ingest.fileStream(spark,
+      spark.read.parquet(landingDir).schema, landingDir,
+      maxFilesPerTrigger))
 
   /** Exact χ² SRM verdicts over a counter table: (event_type, n_a,
     * n_b, chi2_ppm, srm_flag) sorted by type, with χ² =

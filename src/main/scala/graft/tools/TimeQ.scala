@@ -26,7 +26,11 @@ import graft.{Bench, Sessions, SparkEntry}
   * queries when the generated-code cache is too small to hold them
   * (with Spark's 100-entry default, TimeQ's warm q119 read 1.0 s
   * while a q45/q119/q176 rotation read 1.8–2.0 s); the cold count,
-  * or the counts of a query named again later, show them.
+  * or the counts of a query named again later, show them. Its
+  * `build=` is the warm run's time from calling the query function
+  * until the DataFrame returns (eager analysis and any eager jobs),
+  * the share of the time outside stages that runs before the first
+  * job of the write.
   * Usage: `runMain graft.tools.TimeQ q1_agg ta_langid ...`
   * (SPARK_GRAFT_SF_DIR selects the corpus, default sf0.1). */
 object TimeQ {
@@ -36,10 +40,11 @@ object TimeQ {
       taskSumMs: Long, taskMaxMs: Long, tasks: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long)
 
-  /** A query's cold and warm seconds and its warm run's stages, by
+  /** A query's cold and warm seconds, its warm run's build seconds
+    * (see [[Bench.timeOnce]]) and its warm run's stages, by
     * descending summed task runtime. */
   final case class Timing(name: String, cold: Double, warm: Double,
-      stages: Seq[Stage])
+      warmBuild: Double, stages: Seq[Stage])
 
   /** Per-stage task sums and stage names, cleared before each warm
     * run. */
@@ -94,19 +99,20 @@ object TimeQ {
       Bench.warmUp(spark, sfDir)
       names.map { name =>
         val fn = all(name)
-        /** Seconds and classes compiled for one run. */
-        def once(): (Double, Long) = {
+        /** Seconds, build seconds and classes compiled for one run. */
+        def once(): (Double, Double, Long) = {
           val c0 = compiles
-          val sec = Bench.timeOnce(spark, sfDir, fn)(e => throw e)
-          (sec, compiles - c0)
+          val (sec, build) = Bench.timeOnce(spark, sfDir, fn)(e => throw e)
+          (sec, build, compiles - c0)
         }
-        val (cold, coldCompiles) = once()
+        val (cold, _, coldCompiles) = once()
         listener.clear()
-        val (warm, warmCompiles) = once()
+        val (warm, warmBuild, warmCompiles) = once()
         val stages = listener.stages
         println(f"[timeq] $name%-24s cold=$cold%8.3f warm=$warm%8.3f")
         println(f"[stagetime] $name stages=${stages.size}%d " +
-          s"compiles=$coldCompiles/$warmCompiles")
+          s"compiles=$coldCompiles/$warmCompiles " +
+          f"build=${warmBuild * 1e3}%.0fms")
         stages.take(12).foreach { st =>
           println(f"[stagetime]   stage ${st.id}%5d " +
             f"wall=${st.wallMs / 1e3}%7.2f " +
@@ -116,7 +122,7 @@ object TimeQ {
             f"sWr=${st.shuffleWriteBytes / 1e6}%8.1f MB " +
             f"spill=${st.spillBytes / 1e6}%7.1f MB ${st.name}")
         }
-        Timing(name, cold, warm, stages)
+        Timing(name, cold, warm, warmBuild, stages)
       }
     } finally spark.sparkContext.removeSparkListener(listener)
   }

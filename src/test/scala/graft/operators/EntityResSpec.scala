@@ -245,6 +245,25 @@ class EntityResSpec extends AnyFunSuite {
     assert(jobs === globalJobs - 1)
   }
 
+  test("q176's literal probe rows are what Spark computes for the same " +
+      "ids: lower(md5(tag ++ id)) for the fillers, lower(name) for the " +
+      "endpoints") {
+    import org.apache.spark.sql.functions._
+    import s.implicits._
+    val computed = EntityRes.ProbeBlocks.map { b =>
+      s.range(b.nFillers)
+        .select(lit(b.fillerBase) - col("id"),
+          lower(md5(concat(lit(b.fillerTag), col("id").cast("string")))))
+        .union(b.endpoints.toDF("ck", "nm")
+          .select(col("ck"), lower(col("nm"))))
+        .select(lit(b.nation), lit(0L), col("*"))
+    }.reduce(_ union _).collect().map(_.toSeq).sortBy(_(2).toString)
+    val literal = EntityRes.probeRows.map(_.toSeq).sortBy(_(2).toString)
+    assert(literal.size === EntityRes.ErRecallFillers +
+      EntityRes.ErRecallBigFillers + 8)
+    assert(literal === computed.toSeq)
+  }
+
   private def topJoin(p: SparkPlan): Option[BaseJoinExec] = p match {
     case j: BaseJoinExec => Some(j)
     case _ => ExecutedPlans.children(p).view.flatMap(topJoin).headOption

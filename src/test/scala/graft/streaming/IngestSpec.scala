@@ -73,7 +73,8 @@ class IngestSpec extends AnyFunSuite {
   test("the stream start, fresh-start check and per-batch write live " +
       "only in the shared ingest helper") {
     val recipe = Seq(raw"\.foreachBatch\b", "\"checkpointLocation\"",
-      "\"batch_id=\"", "partitionOverwriteMode").map(_.r)
+      "\"batch_id=\"", "partitionOverwriteMode",
+      raw"spark\.readStream\b").map(_.r)
     val helper = Paths.get("src/main/scala/graft/streaming/Ingest.scala")
     val files: Seq[Path] = {
       val s = Files.walk(Paths.get("src/main"))
@@ -88,8 +89,8 @@ class IngestSpec extends AnyFunSuite {
     assert(hits(helper).map(_._1).sorted === recipe.map(_.regex).sorted,
       "each recipe piece appears exactly once in the helper")
     val elsewhere = files.filter(_ != helper).flatMap(hits)
-    assert(elsewhere.isEmpty, "start streams, check for a fresh start and " +
-      "write batches through graft.streaming.Ingest: " +
+    assert(elsewhere.isEmpty, "read file streams, start streams, check " +
+      "for a fresh start and write batches through graft.streaming.Ingest: " +
       elsewhere.map(_._2).mkString(", "))
   }
 }

@@ -4,9 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
-/** TimeQ's loop on the shared session: the `[timeq]` times and the
-  * warm run's stage table come back per name, and the session it was
-  * handed stays usable. */
+/** TimeQ's loop on the shared session: the `[timeq]` times, the warm
+  * run's build time and stage table come back per name, and the
+  * session it was handed stays usable. */
 class TimeQSpec extends AnyFunSuite {
   private lazy val s = SparkSpec.spark
 
@@ -17,6 +17,7 @@ class TimeQSpec extends AnyFunSuite {
     assert(out.map(_.name) === names)
     out.foreach { t =>
       assert(t.cold > 0 && t.warm > 0, t.name)
+      assert(t.warmBuild > 0 && t.warmBuild < t.warm, t.name)
       assert(t.stages.nonEmpty, t.name)
       assert(t.stages.forall(_.tasks > 0), t.name)
       assert(t.stages.map(_.taskSumMs) ===
