@@ -51,7 +51,8 @@ import org.apache.spark.sql.functions._
   * the query set is a bounded batch (pinned here exactly like
   * ann_brute's), and PQ composes with ann_ivf's coarse cells:
   * scan only the probed cells' codes — residual quantization is a
-  * parameter change, not a shape change.
+  * parameter change, not a shape change ([[Ivfpq]] builds that index
+  * from the same `subvectorsOf`/`trainCents`/`assign`).
   */
 object Pq {
 
@@ -62,23 +63,22 @@ object Pq {
   val NQueries = 5  // pinned query panel, the ann_brute convention
   val TopK = 10
 
-  /** Explode a (vec_id, `vcol`, …) relation into its M exact integer
-    * subvectors with squared norms: adds (m, sv, ssq), drops `vcol`,
-    * keeps every other column (q87 carries the coarse cell through).
-    * The (mSubs, subDims) overload is the q179 quantizer-sweep
-    * entry: the training/assignment machinery below is
-    * subspace-count-agnostic (the `m` column carries through), so a
-    * different M is just a different explode shape. */
+  /** Explode a (vec_id, `vcol`, …) relation into its `mSubs` exact
+    * integer subvectors of `Clustering.Dims / mSubs` dims each, with
+    * squared norms: adds (m, sv, ssq), drops `vcol`, keeps every other
+    * column (IVF-PQ carries the coarse cell through). The training and
+    * assignment below are subspace-count-agnostic (the `m` column
+    * carries through), so a different M is only a different explode
+    * shape (q179's quantizer sweep). */
   private[operators] def subvectorsOf(df: DataFrame, vcol: String,
-      mSubs: Int, subDims: Int): DataFrame =
+      mSubs: Int = M): DataFrame = {
+    val subDims = Clustering.Dims / mSubs
     df.withColumn("m", explode(sequence(lit(0), lit(mSubs - 1))))
       .withColumn("sv",
         slice(col(vcol), col("m") * subDims + 1, lit(subDims)))
       .withColumn("ssq", Similarity.idot(col("sv"), col("sv")))
       .drop(vcol)
-
-  private[operators] def subvectorsOf(df: DataFrame,
-      vcol: String): DataFrame = subvectorsOf(df, vcol, M, SubDims)
+  }
 
   /** (vec_id, m, sv, ssq) over the raw embeddings. */
   private def subvectors(s: SparkSession, dir: String): DataFrame =
@@ -92,6 +92,7 @@ object Pq {
     var cents = subs.filter(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").as("cent_id"),
         col("sv").as("cv"), col("ssq").as("csq"))
+      // K×M rows: round 1 broadcasts the seed, not a rescan of subs
       .localCheckpoint(true)
     for (_ <- 1 to Rounds) {
       val sums = assign(subs, cents)
@@ -115,11 +116,11 @@ object Pq {
   /** Nearest-centroid assignment: equi-join on the subspace id
     * against the broadcast codebook, argmin by (dist, cent_id).
     *
-    * Round-14 shape: the argmin is a partial-aggregating
+    * The argmin is a partial-aggregating
     * `min(struct(dist, cent_id, payload…))` groupBy, not a
     * row_number window. (dist, cent_id) is unique within a
     * (vec_id, m) group, so the lexicographic struct minimum IS the
-    * old rank-1 row — payload fields ride along untouched — while
+    * rank-1 row — payload fields ride along untouched — while
     * the map-side combine collapses the K candidate rows per
     * subvector BEFORE the exchange (the window form shuffled all K
     * candidates and sorted them: K× the shuffle bytes plus a
@@ -144,8 +145,8 @@ object Pq {
     // ONE quantization pass: subs feeds both training rounds, the
     // encode and the query distance table — unbarriered, the base
     // scan + ivec kernel + subspace explode re-ran once per consumer
-    // (round-14 profile: three corpus-scale Exchange>Project stages
-    // of ~8 s summed task time each at sf0.1)
+    // (measured: three corpus-scale Exchange>Project stages of ~8 s
+    // summed task time each at sf0.1)
     val subs = subvectors(s, dir).localCheckpoint(false)
     val cents = trainCents(subs)
 
@@ -186,48 +187,41 @@ object Pq {
   }
 
   /** Integer dot of two DuckDB lists of length `n`. */
-  private[operators] def dotSqlN(a: String, b: String, n: Int): String =
+  private[operators] def dotSql(a: String, b: String,
+      n: Int = SubDims): String =
     s"CAST(list_sum(list_transform(range(1, ${n + 1}), " +
       s"i -> $a[i]*$b[i])) AS BIGINT)"
 
-  /** Integer dot of two DuckDB lists (length [[SubDims]]). */
-  private[operators] def dotSql(a: String, b: String): String =
-    dotSqlN(a, b, SubDims)
-
-  /** One Lloyd round as DuckDB CTEs, keyed by subspace, over an
-    * arbitrary subvector CTE `subs` of width `subDims`; `sfx`
-    * namespaces the intermediate CTEs so two quantizer configs can
-    * unroll side by side in one query (q179). */
-  private[operators] def roundSqlN(r: Int, prev: String, out: String,
-      subs: String, subDims: Int, sfx: String): String =
-    s"""d$r$sfx AS (
-       |  SELECT s.vec_id, s.m, s.sv, c.cent_id,
-       |    s.ssq - 2*${dotSqlN("s.sv", "c.cv", subDims)} + c.csq AS dist
-       |  FROM $subs s JOIN $prev c ON c.m = s.m),
-       |a$r$sfx AS (
-       |  SELECT m, cent_id, sv FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
-       |      ORDER BY dist ASC, cent_id ASC) AS crk FROM d$r$sfx)
-       |  WHERE crk = 1),
-       |s$r$sfx AS (
-       |  SELECT m, cent_id, t.i AS i,
-       |    CAST(sum(sv[t.i+1]) AS BIGINT) AS sm, count(*) AS n
-       |  FROM a$r$sfx, range(0, $subDims) t(i) GROUP BY m, cent_id, t.i),
-       |$out AS (
-       |  SELECT m, cent_id, cv, ${dotSqlN("cv", "cv", subDims)} AS csq
-       |  FROM (SELECT m, cent_id,
-       |          list(CAST(floor(CAST(sm AS DOUBLE)/n) AS BIGINT)
-       |            ORDER BY i) AS cv
-       |        FROM s$r$sfx GROUP BY m, cent_id))""".stripMargin
-
-  /** One Lloyd round as DuckDB CTEs, keyed by subspace. */
-  private[operators] def roundSql(r: Int, prev: String, out: String): String =
-    roundSqlN(r, prev, out, "subs", SubDims, "")
+  /** The [[Rounds]] Lloyd rounds as DuckDB CTEs, keyed by subspace,
+    * over a subvector CTE `subs` of width `subDims`: round r reads
+    * codebook `c{r-1}` and writes `c{r}`, starting from the seed `c0`.
+    * `sfx` suffixes every CTE name so two quantizer configs can unroll
+    * side by side in one query (q179). */
+  private[operators] def lloydSql(subs: String = "subs",
+      subDims: Int = SubDims, sfx: String = ""): String =
+    (1 to Rounds).map { r =>
+      s"""d$r$sfx AS (
+         |  SELECT s.vec_id, s.m, s.sv, c.cent_id,
+         |    s.ssq - 2*${dotSql("s.sv", "c.cv", subDims)} + c.csq AS dist
+         |  FROM $subs s JOIN c${r - 1}$sfx c ON c.m = s.m),
+         |a$r$sfx AS (
+         |  SELECT m, cent_id, sv FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
+         |      ORDER BY dist ASC, cent_id ASC) AS crk FROM d$r$sfx)
+         |  WHERE crk = 1),
+         |s$r$sfx AS (
+         |  SELECT m, cent_id, t.i AS i,
+         |    CAST(sum(sv[t.i+1]) AS BIGINT) AS sm, count(*) AS n
+         |  FROM a$r$sfx, range(0, $subDims) t(i) GROUP BY m, cent_id, t.i),
+         |c$r$sfx AS (
+         |  SELECT m, cent_id, cv, ${dotSql("cv", "cv", subDims)} AS csq
+         |  FROM (SELECT m, cent_id,
+         |          list(CAST(floor(CAST(sm AS DOUBLE)/n) AS BIGINT)
+         |            ORDER BY i) AS cv
+         |        FROM s$r$sfx GROUP BY m, cent_id))""".stripMargin
+    }.mkString(",\n")
 
   val q85PqAdcOracle: String = {
-    val rounds = (1 to Rounds)
-      .map(r => roundSql(r, if (r == 1) "c0" else s"c${r - 1}", s"c$r"))
-      .mkString(",\n")
     val cFin = s"c$Rounds"
     s"""WITH base AS (
        |  SELECT vec_id, ${Similarity.ivecSql} AS v FROM embeddings),
@@ -239,7 +233,7 @@ object Pq {
        |        FROM base, range(0, $M) t(m))),
        |c0 AS (SELECT m, vec_id AS cent_id, sv AS cv, ssq AS csq
        |       FROM subs WHERE vec_id < $PqK),
-       |$rounds,
+       |${lloydSql()},
        |enc AS (
        |  SELECT vec_id, m, cent_id AS code FROM (
        |    SELECT s.vec_id, s.m, c.cent_id,

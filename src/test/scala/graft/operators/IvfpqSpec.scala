@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.spark.sql.execution.UnionExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{ExecutedPlans, SparkSpec}
 
 /** IVF-PQ invariants on the real sf0.001 corpus (exact values gate
   * through the DuckDB oracle): ranks contiguous, residual-ADC
@@ -64,5 +66,63 @@ class IvfpqSpec extends AnyFunSuite {
     val a = graft.tools.PlanAudit.of(Ivfpq.q87Ivfpq(s, sf))
     assert(!a.cartesian && !a.globalWindow)
     assert(graft.tools.PlanAudit.intendedNonEqui("q87_ivfpq"))
+  }
+
+  /** (axis value, k) → (n_queries, cand_rows, sum_hits, recall_ppm):
+    * the axis is nprobe for q178 and m_subs for q179. */
+  private def frontierRows(df: org.apache.spark.sql.DataFrame)
+      : Map[(Long, Long), (Long, Long, Long, Long)] =
+    df.select(df.columns(0), "k", "n_queries", "cand_rows", "sum_hits",
+        "recall_ppm").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+      .toMap
+
+  private lazy val q178 = frontierRows(Ivfpq.q178AnnFrontier(s, sf))
+  private lazy val q179 = frontierRows(Ivfpq.q179AnnQuantizer(s, sf))
+
+  test("q178 and q179 report every configuration of their axes") {
+    assert(q178.keySet === (for (np <- Ivfpq.FrontierNProbes;
+      k <- Ivfpq.FrontierKs) yield (np.toLong, k.toLong)).toSet)
+    assert(q179.keySet === (for (m <- Ivfpq.QuantMs;
+      k <- Ivfpq.FrontierKs) yield (m.toLong, k.toLong)).toSet)
+  }
+
+  test("q179's M=8 rows equal q178's nprobe=1 rows, and cand_rows is " +
+      "the same for every M") {
+    assert(Ivfpq.QuantMs.contains(Pq.M))
+    Ivfpq.FrontierKs.foreach { k =>
+      assert(q179((Pq.M.toLong, k.toLong)) ===
+        q178((Ivfpq.QuantNProbe.toLong, k.toLong)), s"k=$k")
+    }
+    assert(q179.values.map(_._2).toSet.size === 1, q179)
+  }
+
+  test("q178/q179: recall_ppm = sum_hits·10⁶ div (n_queries·k) and " +
+      "0 ≤ sum_hits ≤ n_queries·k") {
+    (q178.toSeq ++ q179.toSeq).foreach {
+      case ((_, k), (nq, _, hits, ppm)) =>
+        assert(nq === Pq.NQueries.toLong)
+        assert(hits >= 0L && hits <= nq * k, s"k=$k hits=$hits")
+        assert(ppm === hits * 1000000L / (nq * k), s"k=$k")
+    }
+  }
+
+  test("q179 folds each M into one frontier: QuantMs.size rank windows " +
+      "over the scored stream, the truth window once, no per-k union") {
+    val df = Ivfpq.q179AnnQuantizer(s, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val nodes = ExecutedPlans.nodes(plan)
+    // windows by their leading order key: adist is a frontier's rank
+    // window, dist the exact truth's (both frontiers read one
+    // exchange, so it runs once); cdist ranks each build's probe panel
+    val windows = nodes.collect { case w: WindowExec =>
+      w.orderSpec.head.child.references.head.name }
+    assert(windows.count(_ == "adist") === Ivfpq.QuantMs.size, plan)
+    assert(windows.count(_ == "dist") === 1, plan)
+    val unions = nodes.collect { case u: UnionExec => u }
+    assert(unions.size === 1 &&
+      unions.head.children.size === Ivfpq.QuantMs.size, plan)
   }
 }
